@@ -2173,7 +2173,8 @@ def filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def funnel_wide_agg(docs: DataFrame) -> DataFrame:
     """Stage conjunctions + the single wide fold — shared verbatim by the
     batch entry and the streaming twin (which runs this agg on the
-    incremental engine in complete mode)."""
+    incremental engine in complete mode; its state is five counters
+    total, and funnel_ledger unpivots the 1-row drain batch-side)."""
     from flink_gmall_spark.functions.tokenize import tokens_col
 
     langs = ", ".join(f"'{l}'" for l in FUNNEL_LANGS)
@@ -2434,8 +2435,10 @@ def span_corruption_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def span_spec_transform(docs: DataFrame) -> DataFrame:
     """The per-row masking-spec transform behind span_corruption_spec —
-    shared verbatim by the streaming twin (stream_span_corruption), so
-    ingest-time and backfill specs cannot drift."""
+    shared verbatim by the streaming twin, so ingest-time and backfill
+    specs cannot drift: zero aggregation, zero join, and the seeded hash
+    picks byte-identical spans on both paths (the property that makes
+    corruption targets cacheable across them)."""
     base = docs.select(
         "doc_id", tokens_col("text").alias("t")
     ).select("doc_id", F.size("t").cast("long").alias("n_tokens"))
@@ -2672,7 +2675,9 @@ def shuffle_shard_agg(docs: DataFrame) -> DataFrame:
     """The shard-ledger transform — shared VERBATIM by the batch entry
     and the streaming twin (both pair with ORACLE_GLOBAL_SHUFFLE) so the
     shard key expression cannot drift between the two engines. Pure
-    per-row math + one keyed aggregation; runs unchanged on a stream."""
+    per-row math + one keyed aggregation; runs unchanged on a stream,
+    where its state is at most 16 groups — one per leading md5 hex
+    digit."""
     keyed = docs.select(
         F.expr(
             f"md5(concat('{SHUFFLE_SEED}', CAST(doc_id AS STRING)))"
@@ -2717,7 +2722,9 @@ def padding_waste_agg(docs: DataFrame) -> DataFrame:
     MAX_SEQ_LEN. The ledger prices both against the token mass — the
     table that justifies sequence packing (curation_pack_chunks) over
     padded batching. Pure per-row integer math + one keyed aggregation;
-    works unchanged on a stream."""
+    works unchanged on a stream, with bounded state: bucket_hi is a
+    multiple of LEN_BUCKET in [0, MAX_SEQ_LEN], so at most
+    MAX_SEQ_LEN // LEN_BUCKET + 1 groups."""
     base = docs.select(
         F.size(tokens_col("text")).cast("long").alias("n_tok")
     ).select(
@@ -2779,23 +2786,20 @@ ORACLE_PADDING_WASTE = ORACLE_PADDING_WASTE.format(T=_SHUF_T)
 SEQ_LEN_SWEEP = (128, 256, 512, 1024)
 
 
-def _seq_len_base(docs: DataFrame) -> DataFrame:
-    """(n_tok) per non-empty doc — the scored input of the sequence-
-    length sweep, shared VERBATIM by the batch entry and the streaming
-    twin."""
-    return docs.select(
+def seq_len_wide(docs: DataFrame) -> DataFrame:
+    """The sweep's 2 + 2·|SWEEP| conditional aggregates over (n_tok) per
+    non-empty doc — ONE corpus pass prices every candidate length
+    (map-side partials, a single global fold; the corpus is never
+    row-duplicated per L). Shared VERBATIM by the batch entry and the
+    streaming twin, where it is one complete-mode aggregation with
+    constant state (2 + 2·|SWEEP| counters). Truncation is NOT
+    aggregated: greatest(n_tok - L, 0) == n_tok - least(n_tok, L)
+    identically, so trunc_tokens derives as tokens - eff in the finish
+    (review r11 — fewer hot-fold terms and fewer streaming-state
+    counters than a redundant sum)."""
+    base = docs.select(
         F.size(tokens_col("text")).cast("long").alias("n_tok")
     ).filter(F.col("n_tok") > 0)
-
-
-def _seq_len_wide_aggs() -> list:
-    """The 2 + 2·|SWEEP| conditional aggregates of the sweep — ONE
-    corpus pass prices every candidate length (map-side partials, a
-    single global fold; the corpus is never row-duplicated per L).
-    Truncation is NOT aggregated: greatest(n_tok - L, 0) ==
-    n_tok - least(n_tok, L) identically, so trunc_tokens derives as
-    tokens - eff in the finish (review r11 — fewer hot-fold terms and
-    fewer streaming-state counters than a redundant sum)."""
     aggs = [
         F.count(F.lit(1)).cast("long").alias("docs"),
         F.sum("n_tok").cast("long").alias("tokens"),
@@ -2809,7 +2813,7 @@ def _seq_len_wide_aggs() -> list:
             .cast("long")
             .alias(f"chunks_{L}"),
         ]
-    return aggs
+    return base.agg(*aggs)
 
 
 def seq_len_finish(wide: DataFrame) -> DataFrame:
@@ -2870,7 +2874,7 @@ def seq_len_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^63 up to ~9e15 tokens — two orders past a 100 TB text corpus."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return seq_len_finish(_seq_len_base(docs).agg(*_seq_len_wide_aggs()))
+    return seq_len_finish(seq_len_wide(docs))
 
 
 def _seq_len_oracle() -> str:
@@ -2942,7 +2946,9 @@ def chunk_overlap_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
 def chunk_spec_transform(docs: DataFrame) -> DataFrame:
     """The chunk-spec transform — shared VERBATIM by the batch entry and
     the streaming twin (both pair with ORACLE_CHUNK_OVERLAP); pure
-    per-row expression math, runs unchanged on a stream."""
+    per-row expression math, runs unchanged on a stream, and the integer
+    start arithmetic makes stream and backfill emit byte-identical
+    specs."""
     base = docs.select(
         "doc_id", F.size(tokens_col("text")).cast("long").alias("n_tok")
     ).filter(F.col("n_tok") > 0)
@@ -3014,8 +3020,9 @@ def repeat_epochs_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repeat_epochs_fold(docs: DataFrame) -> DataFrame:
     """The per-source (docs, tokens) fold — the only aggregation in the
     ledger, shared VERBATIM with the streaming twin (which runs it as a
-    complete-mode streaming agg and applies repeat_epochs_finish
-    batch-side on the memory table)."""
+    complete-mode streaming agg — one group of state per distinct
+    source — and applies repeat_epochs_finish batch-side on the memory
+    table)."""
     return (
         docs.select("source", F.size(tokens_col("text")).cast("long").alias("n_tok"))
         .groupBy("source")
@@ -3099,6 +3106,35 @@ def pretrain_gate(docs: DataFrame) -> DataFrame:
         & (F.col("n_tokens") <= MAX_TOKENS)
         & (F.col("stop_ct") >= 1)
     ).select("doc_id", "text")
+
+
+def pretrain_dedup(docs: DataFrame) -> DataFrame:
+    """Stages 1-2 of the pretrain build as ONE streaming aggregation:
+    the quality gate, then exact dedup as groupBy(md5(text)) keeping
+    min(struct(doc_id, text)) — the batch policy's OWN key ("smallest
+    doc_id per md5(text)") reproduced ARRIVAL-ORDER-INDEPENDENTLY (min
+    is commutative; a first-seen dropDuplicates would tie the winner to
+    micro-batch order and drift from any backfill). doc_id is unique, so
+    the min struct IS the min-doc_id row. The streaming twin drains this
+    in complete mode and hands ``s.doc_id, s.text`` to pretrain_finish
+    (the explode cannot follow a streaming aggregation in one query).
+
+    State bound: one (128-bit key, winning (doc_id, text)) entry per
+    distinct gated doc — the key matches the batch dedup window's hash
+    key instead of holding a second full text copy; a production ingest
+    further bounds it by ageing entries with
+    dropDuplicatesWithinWatermark once the re-fetch horizon passes (the
+    streaming.jobs.dedup_within_watermark precedent)."""
+    return (
+        pretrain_gate(docs)
+        .groupBy(F.md5("text").alias("h"))
+        .agg(F.min(F.struct("doc_id", "text")).alias("s"))
+    )
+
+
+def pretrain_dedup_finish(deduped: DataFrame) -> DataFrame:
+    """pretrain_finish over the drained pretrain_dedup table."""
+    return pretrain_finish(deduped.select("s.doc_id", "s.text"))
 
 
 def pretrain_finish(deduped: DataFrame) -> DataFrame:
@@ -3274,9 +3310,16 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py — and recorded in SCALE.md)."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return curriculum_finish(
-        _quality_scored(docs).select("doc_id", "n_tokens", "score")
-    )
+    return curriculum_finish(curriculum_scored(docs))
+
+
+def curriculum_scored(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, score) — the scored input of curriculum_finish,
+    shared VERBATIM by the batch entry and the streaming twin. Pure
+    per-row math, so the twin runs it at ingest in append mode with zero
+    streaming state; the stage boundaries run batch-side on the drain
+    (rank windows cannot follow an append stream)."""
+    return _quality_scored(docs).select("doc_id", "n_tokens", "score")
 
 
 def curriculum_finish(base: DataFrame) -> DataFrame:
@@ -3387,9 +3430,14 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-tested, tests/test_properties.py; recorded in SCALE.md)."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return preference_finish(
-        _quality_scored(docs).select("doc_id", "source", "score")
-    )
+    return preference_finish(preference_scored(docs))
+
+
+def preference_scored(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, score) — the scored input of preference_finish,
+    shared VERBATIM by the batch entry and the streaming twin (zero-state
+    append-mode ingest map, the curriculum_scored discipline)."""
+    return _quality_scored(docs).select("doc_id", "source", "score")
 
 
 def preference_finish(base: DataFrame) -> DataFrame:
@@ -3518,10 +3566,10 @@ def dsir_weight_table(docs: DataFrame) -> DataFrame:
     256-row table. Buckets the corpus never hit still appear (literal
     range left-join) with the smoothing floor, so the serve-side array
     lookup is total."""
-    return dsir_weight_finish(_dsir_counts(docs))
+    return dsir_weight_finish(dsir_counts(docs))
 
 
-def _dsir_counts(docs: DataFrame) -> DataFrame:
+def dsir_counts(docs: DataFrame) -> DataFrame:
     """The 256-key conditional count aggregation — shared VERBATIM by
     the batch estimator and the streaming twin (complete-mode
     streamable: <= HASH_DIM keys x 2 counters of state)."""

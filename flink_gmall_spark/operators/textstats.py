@@ -723,25 +723,22 @@ ORDER BY exact_ct DESC, term ASC LIMIT {FREQ_TOPK}
 SWEEP_MIN_TOKENS = (0, 5, 10, 20, 40, 80, 160, 320)
 
 
-def sweep_base_stats(docs: DataFrame) -> DataFrame:
-    """(n_tokens, stop_ct) per document — the sweep's gate terms, shared
-    by the batch entry and its streaming twin (both pair with
-    ORACLE_QUALITY_THRESHOLD_SWEEP) so the terms cannot drift between
-    the two engines. Works unchanged on a streaming DataFrame: pure
-    per-row expressions."""
+def sweep_wide(docs: DataFrame) -> DataFrame:
+    """The whole threshold grid as ONE global fold: per-doc gate terms
+    (n_tokens, stop_ct), then |SWEEP| x 2 conditional aggregates
+    (d{thr} survivors, k{thr} kept tokens) — one corpus pass for the
+    grid. Shared by the batch entry and its streaming twin (both pair
+    with ORACLE_QUALITY_THRESHOLD_SWEEP) so the terms cannot drift
+    between the two engines. On a stream it is the single complete-mode
+    aggregation Spark allows, with constant state (|SWEEP| x 2
+    counters); sweep_stack then unpivots the 1-row drain batch-side."""
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
-    return docs.select(tokens_col("text").alias("t")).select(
+    base = docs.select(tokens_col("text").alias("t")).select(
         F.size("t").cast("long").alias("n_tokens"),
         F.expr(f"size(filter(t, x -> array_contains(array({stop_arr}), x)))")
         .cast("long")
         .alias("stop_ct"),
     )
-
-
-def sweep_wide_aggs() -> list:
-    """The |SWEEP| x 2 conditional aggregates (d{thr} survivors, k{thr}
-    kept tokens) over sweep_base_stats columns — one corpus pass for the
-    whole grid."""
     aggs = []
     for thr in SWEEP_MIN_TOKENS:
         keep = (
@@ -755,7 +752,7 @@ def sweep_wide_aggs() -> list:
             .cast("long")
             .alias(f"k{thr}")
         )
-    return aggs
+    return base.agg(*aggs)
 
 
 def sweep_stack(wide: DataFrame) -> DataFrame:
@@ -784,7 +781,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     |SWEEP| scans for the naive loop."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return sweep_stack(sweep_base_stats(docs).agg(*sweep_wide_aggs()))
+    return sweep_stack(sweep_wide(docs))
 
 
 _SWEEP_SQL = ", ".join(str(t) for t in SWEEP_MIN_TOKENS)
@@ -829,20 +826,23 @@ def classifier_roc_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (hash-pinned); NULL when a class is empty."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return roc_finish(roc_base_stats(docs).agg(*roc_wide_aggs()))
+    return roc_finish(roc_wide(docs))
 
 
-def roc_base_stats(docs: DataFrame) -> DataFrame:
-    """Per-doc (nscore, truth) — the ROC sweep's terms, shared VERBATIM
+def roc_wide(docs: DataFrame) -> DataFrame:
+    """The whole confusion grid as ONE global fold: per-doc (nscore,
+    truth) terms, then |GRID| x 4 conditional confusion counts. Shared
     by the batch entry and the streaming twin (both pair with
-    ORACLE_CLASSIFIER_ROC). Pure per-row expressions."""
+    ORACLE_CLASSIFIER_ROC); on a stream it is one complete-mode
+    aggregation with constant state (|GRID| x 4 counters), and
+    roc_finish applies the stack and rate math batch-side."""
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
     w_arr = ", ".join(str(w) for w in CLS_WEIGHTS)
     idx = (
         f"(locate(substring(md5(tok), 1, 1), '{_HEXES}') - 1) * 16"
         f" + locate(substring(md5(tok), 2, 1), '{_HEXES}')"
     )
-    return docs.select(tokens_col("text").alias("t")).filter(
+    base = docs.select(tokens_col("text").alias("t")).filter(
         F.size("t") > 0
     ).select(
         F.size("t").cast("long").alias("n_tokens"),
@@ -861,11 +861,6 @@ def roc_base_stats(docs: DataFrame) -> DataFrame:
             & (F.col("stop_ct") >= 1)
         ).alias("truth"),
     )
-
-
-def roc_wide_aggs() -> list:
-    """The |GRID| x 4 conditional confusion aggregates — one fold for
-    the whole grid."""
     aggs = []
     for i, thr in enumerate(ROC_THRESHOLDS):
         pred = F.col("nscore") >= thr
@@ -873,7 +868,7 @@ def roc_wide_aggs() -> list:
         aggs.append(F.count(F.when(pred & ~F.col("truth"), 1)).alias(f"fp{i}"))
         aggs.append(F.count(F.when(~pred & F.col("truth"), 1)).alias(f"fn{i}"))
         aggs.append(F.count(F.when(~pred & ~F.col("truth"), 1)).alias(f"tn{i}"))
-    return aggs
+    return base.agg(*aggs)
 
 
 def roc_finish(wide: DataFrame) -> DataFrame:
@@ -1092,7 +1087,10 @@ ZIPF_LN_SCALE = 1_000_000  # ln values floor-scaled before the integer sums
 
 def corpus_cf(docs: DataFrame) -> DataFrame:
     """(tok, cf): collection frequency — ONE keyed corpus aggregation.
-    Shared by the batch entry and the streaming complete-mode fold."""
+    Shared by the batch entry and the streaming complete-mode fold,
+    whose state is |vocab| keys x one counter; zipf_finish runs
+    batch-side on the drain (rank windows cannot follow a streaming
+    aggregation)."""
     return (
         docs.select(F.explode(tokens_col("text")).alias("tok"))
         .groupBy("tok")
@@ -1259,8 +1257,9 @@ def entropy_terms(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, c_i) — one row per DISTINCT token of each
     non-empty document, with the per-doc histogram computed INSIDE the
     row via the _token_run_lengths sorted run-length fold (O(n log n)
-    per row; zero shuffle, zero join, runs unchanged on a stream). The
-    explode only fans out to the distinct-type count, ln-chain-ready;
+    per row; zero shuffle, zero join, zero state: it runs unchanged on
+    a stream in append mode, and entropy_finish's per-doc group-by runs
+    batch-side on the drain). The explode only fans out to the distinct-type count, ln-chain-ready;
     the downstream group-by never sees c_i order, so the sorted-token
     histogram is interchangeable with the oracle's first-occurrence
     one."""

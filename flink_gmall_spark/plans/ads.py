@@ -2403,7 +2403,8 @@ def kanon_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kanon_cells(cust: DataFrame) -> DataFrame:
     """The bounded cell aggregation — shared verbatim by the batch entry
     and the streaming twin (where it runs on the incremental engine in
-    complete mode; money folds as DECIMAL cents, order-independent)."""
+    complete mode with one counter pair of state per cell of the bounded
+    key domain; money folds as DECIMAL cents, order-independent)."""
     return cust.groupBy(
         F.col("c_nationkey").alias("nationkey"),
         F.col("c_mktsegment").alias("segment"),
@@ -2416,7 +2417,9 @@ def kanon_cells(cust: DataFrame) -> DataFrame:
 
 def kanon_suppress(cells: DataFrame) -> DataFrame:
     """Suppression split + reconciling fold over the bounded cell table
-    (batch side of both twins)."""
+    (batch side of both twins). The stream twin suppresses at
+    PUBLICATION time, never in the state store, so a cell crossing the
+    K threshold later un-suppresses correctly."""
     ok = cells.filter(F.col("n_customers") >= KANON_K)
     supp = (
         cells.filter(F.col("n_customers") < KANON_K)

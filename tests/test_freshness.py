@@ -1,12 +1,12 @@
-"""Machine-checked freshness invariant (VERDICT r12 ask #5).
+"""Machine-checked freshness invariant.
 
-The driver samples the first 50 registry entries per round; the builder
-rotates `_SAMPLE_PRIORITY` so every entry re-earns a green row within a
-bounded number of rounds, new entries get verified immediately, and
-expression-touched entries re-verify the same round. Through round 12
-this was comment discipline; these tests enforce it against the
-committed CORRECTNESS_r*.json ledger, with the window rule defined ONCE
-in tools/coverage_report.staged_window.
+The external correctness run samples the first 50 registry entries per
+round. The registry derives that window at import from the committed
+CORRECTNESS_r*.json ledger plus the declared re-verifications
+(``_REVERIFY_HEAD``), with the rule defined ONCE in
+``registry.staged_window``: new entries get verified
+immediately, changed entries re-verify the same round, and every entry
+re-earns a green row within a bounded number of rounds.
 """
 
 from __future__ import annotations
@@ -15,31 +15,32 @@ import math
 
 
 def _ledger():
-    from tools.coverage_report import last_green_rounds
+    from flink_gmall_spark.registry import last_green_rounds
 
     return last_green_rounds()
 
 
 def test_sample_window_matches_staging_rule():
-    """_SAMPLE_PRIORITY must be exactly what the rule derives: new
-    entries + declared re-verifications + stalest fill. Hand-editing the
-    window without restaging (or forgetting to declare a changed-code
-    re-verification in _REVERIFY_HEAD) fails here."""
+    """The first 50 registrations — what the correctness run samples —
+    must be exactly the rule's window, and the rule's head (new entries
+    + declared re-verifications) must fit in it whole: staged_window
+    cuts a longer head so the import never fails, which would leave the
+    cut entries unsampled."""
     from flink_gmall_spark.registry import (
         _REGISTRATION_ORDER,
         _REVERIFY_HEAD,
-        _SAMPLE_PRIORITY,
+        WINDOW_SIZE,
+        registry,
+        staged_window,
     )
-    from tools.coverage_report import staged_window
 
-    want = staged_window(_REGISTRATION_ORDER, _ledger(), _REVERIFY_HEAD)
-    assert len(_SAMPLE_PRIORITY) == len(want) == 50
-    # sets, not sequence: order within the window is presentation; the
-    # driver samples all 50 regardless
-    assert set(_SAMPLE_PRIORITY) == set(want), (
-        sorted(set(want) - set(_SAMPLE_PRIORITY)),
-        sorted(set(_SAMPLE_PRIORITY) - set(want)),
-    )
+    last = _ledger()
+    head = {n for n in _REGISTRATION_ORDER if n not in last} | set(_REVERIFY_HEAD)
+    assert len(head) <= WINDOW_SIZE, sorted(head)
+    assert not set(_REVERIFY_HEAD) - set(_REGISTRATION_ORDER), _REVERIFY_HEAD
+    want = staged_window(_REGISTRATION_ORDER, last, _REVERIFY_HEAD)
+    assert len(want) == WINDOW_SIZE == 50
+    assert list(registry())[:WINDOW_SIZE] == want
 
 
 def test_every_entry_green_or_staged():

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pandas as pd
 
 from flink_gmall_spark.plans import dwm, dws
+from flink_gmall_spark.registry import registry
 from flink_gmall_spark.streaming import jobs, state
 from tests.oracle import normalize
 
@@ -16,9 +17,36 @@ def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
 
 
 def test_stream_visitor_stats_matches_batch(spark, sf_dir):
-    got = jobs.stream_visitor_stats(spark, sf_dir).toPandas()
+    got = registry()["stream_visitor_stats"].fn(spark, sf_dir).toPandas()
     want = dws.visitor_stats(spark, sf_dir).toPandas()
     assert frames_equal(got, want)
+
+
+def test_complete_mode_transforms_hold_their_state_bounds(spark, sf_dir):
+    """The state bounds the complete-mode transforms' docstrings claim,
+    checked on their drains: complete mode emits one row per group held
+    in the state store."""
+    from flink_gmall_spark.operators import curation
+    from flink_gmall_spark.sources import load
+
+    def drain(transform):
+        docs = jobs.read_stream(spark, sf_dir, "documents")
+        return jobs.run_to_memory(transform(docs), "complete").toPandas()
+
+    shards = drain(curation.shuffle_shard_agg)
+    assert 0 < len(shards) <= 16
+    assert shards["shard"].is_unique
+    assert shards["shard"].str.fullmatch("[0-9a-f]").all()
+
+    buckets = drain(curation.padding_waste_agg)
+    assert 0 < len(buckets) <= curation.MAX_SEQ_LEN // curation.LEN_BUCKET + 1
+    assert (buckets["bucket_hi"] % curation.LEN_BUCKET == 0).all()
+    assert buckets["bucket_hi"].between(0, curation.MAX_SEQ_LEN).all()
+
+    per_source = drain(curation.repeat_epochs_fold)
+    n_sources = load(spark, sf_dir, "documents").select("source").distinct().count()
+    assert len(per_source) == n_sources
+    assert per_source["source"].is_unique
 
 
 def test_stream_visit_flag_matches_batch(spark, sf_dir):
@@ -270,7 +298,7 @@ def test_stream_ads_hourly_from_sink_matches_direct_rollup(spark, sf_dir):
     import pandas as pd
 
     got = jobs.stream_ads_hourly_from_sink(spark, sf_dir).toPandas()
-    direct = jobs.stream_windowed_append(spark, sf_dir).toPandas()
+    direct = registry()["stream_windowed_append"].fn(spark, sf_dir).toPandas()
     direct["hr"] = pd.to_datetime(direct["stt"]).dt.hour.astype("int64")
     want = (
         direct.groupby("hr", as_index=False)

@@ -1,10 +1,20 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md — physical-plan evidence for the headline queries
 (pushdown, broadcast joins, partial aggregation, TakeOrderedAndProject).
-Run: python tools/dump_plans.py"""
+Run: python tools/dump_plans.py
+
+Plan-identity check: ``python tools/dump_plans.py --md5 NAME...`` prints
+one JSON object mapping each registry entry to the md5 of its normalized
+``explain("formatted")`` text — for the DataFrame the entry returns
+(``entry``) and for every streaming DataFrame started while the entry
+builds (``streams``, in start order). Run it on two trees and compare:
+equal md5s mean a refactor left the plans byte-identical."""
 
 from __future__ import annotations
 
+import argparse
+import hashlib
+import json
 import os
 import re
 import sys
@@ -162,9 +172,66 @@ def condense(plan: str, max_lines: int = 40) -> str:
     return "\n".join(lines[:max_lines])
 
 
+# Per-run noise in explain text: expression, plan and lambda-variable
+# ids, streaming run ids, and the random names of drain tables and
+# scratch dirs.
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_#"),
+    (re.compile(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"(mem_|stream_drain/|/)[0-9a-f]{12}\b"), r"\1<id>"),
+)
+
+
+def normalized_plan(df) -> str:
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    for pat, repl in _VOLATILE:
+        text = pat.sub(repl, text)
+    return text
+
+
+def plan_md5s(spark, sf: str, names: list[str]) -> dict[str, dict]:
+    """{name: {"entry": md5, "streams": [md5, ...]}} — the streams are
+    captured at DataStreamWriter.start, so run_to_memory and every other
+    drain an entry starts are covered."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    def md5(df) -> str:
+        return hashlib.md5(normalized_plan(df).encode()).hexdigest()
+
+    streams: list[str] = []
+    start = DataStreamWriter.start
+
+    def recording_start(writer, *args, **kwargs):
+        streams.append(md5(writer._df))
+        return start(writer, *args, **kwargs)
+
+    DataStreamWriter.start = recording_start
+    out = {}
+    try:
+        for name in names:
+            streams.clear()
+            entry = md5(registry()[name].fn(spark, sf))
+            out[name] = {"entry": entry, "streams": list(streams)}
+    finally:
+        DataStreamWriter.start = start
+    return out
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--md5", nargs="+", metavar="NAME",
+                    help="print normalized plan md5s for these entries")
+    args = ap.parse_args()
     spark = get_spark("dump-plans", cpus="4")
     sf = "/root/testdata/sf0.001"
+    if args.md5:
+        print(json.dumps(plan_md5s(spark, sf, args.md5), indent=1))
+        spark.stop()
+        return
     out = [
         "# PLANS — physical-plan evidence (generated by tools/dump_plans.py)",
         "",
