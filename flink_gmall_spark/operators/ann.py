@@ -1181,6 +1181,14 @@ _DUCK_PQ_SQDIST = (
 )
 
 
+def pq_vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v) — the embeddings as double arrays, the input every PQ
+    encoder and the ADC serve read."""
+    return emb.select(
+        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
+    )
+
+
 def _pq_codes(e: DataFrame, cb_src: DataFrame | None = None) -> DataFrame:
     """PQ-encode ``e(vec_id, v)`` -> (vec_id, sub_id, code, sdist).
 
@@ -1194,7 +1202,7 @@ def _pq_codes(e: DataFrame, cb_src: DataFrame | None = None) -> DataFrame:
     ``cb_src`` lets a STREAMING caller supply the codebook from a static
     (batch) frame — a streaming ``e`` cannot be aggregated into the
     1-row codebook, and a production encoder loads a trained codebook
-    anyway (see streaming.jobs.stream_pq_encode)."""
+    anyway (see pq_encode_probe)."""
     cb = (cb_src if cb_src is not None else e).filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
@@ -1221,10 +1229,17 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization error. The artifact an ADC index stores."""
     tune(spark)
     emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
-    )
-    return _pq_codes(e).select(
+    return pq_encode_probe(emb, pq_vectors(emb))
+
+
+def pq_encode_probe(q: DataFrame, cb: DataFrame) -> DataFrame:
+    """Encode the embeddings ``q`` against the codebook vectors of
+    ``cb`` (pq_vectors). The batch entry encodes the corpus against its
+    own codebook; the stream twin encodes the embedding STREAM at
+    ingest against a codebook trained offline on the static table —
+    stateless, append mode, a map-only payload behind the stream-static
+    broadcast join."""
+    return _pq_codes(pq_vectors(q), cb_src=cb).select(
         "vec_id", "sub_id", "code", F.round("sdist", 6).alias("sdist")
     )
 
@@ -1268,10 +1283,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash-matches; ranking is (adist ASC, vec_id ASC).
     """
     tune(spark)
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
-    )
+    e = pq_vectors(load(spark, sf_dir, "embeddings"))
     codes = _pq_codes(e).select("vec_id", "sub_id", "code")
     return adc_topk_from_codes(codes, e)
 
@@ -1386,10 +1398,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact.
     """
     tune(spark)
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
-    )
+    e = pq_vectors(load(spark, sf_dir, "embeddings"))
     cent = e.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("ivf_cid"), F.col("v").alias("icv")
     )
@@ -1687,10 +1696,7 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     division, so the report hash-pins despite being float-valued.
     Cost: the encode pass it audits plus a PQ_M-row aggregation."""
     tune(spark)
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
-    )
+    e = pq_vectors(load(spark, sf_dir, "embeddings"))
     agg = _pq_codes(e).groupBy("sub_id").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum(F.col("sdist").cast("decimal(27,15)")).alias("S"),

@@ -821,7 +821,7 @@ def _lm_bigrams(docs: DataFrame) -> DataFrame:
     ).select("doc_id", "lang", "bg.w1", "bg.bigram")
 
 
-def _lm_count_tables(
+def lm_count_tables(
     docs: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The corpus LM: (bigram, c12), (w1, c1v = c1 + V), and the 1-row
@@ -872,10 +872,15 @@ def lm_attach_counts(
     )
 
 
-def lm_log_tables(docs: DataFrame) -> DataFrame:
-    """Batch composition: LM trained on and scored over the same corpus
-    (where the left joins never miss — batch results are unchanged)."""
-    return lm_attach_counts(_lm_bigrams(docs), *_lm_count_tables(docs))
+def lm_log_terms(
+    q: DataFrame, tables: tuple[DataFrame, DataFrame, DataFrame]
+) -> DataFrame:
+    """The documents of ``q`` exploded to bigrams and scored against the
+    LM ``tables`` (lm_count_tables). The batch entry trains on and
+    scores the same corpus (where the left joins never miss); the
+    stream twin scores arriving documents against an LM trained
+    offline on the static corpus."""
+    return lm_attach_counts(_lm_bigrams(q), *tables)
 
 
 def lm_logprob_finish(terms: DataFrame) -> DataFrame:
@@ -922,7 +927,7 @@ def lm_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.93 s spread vs 1.59 s unspread; the bigram fold is too cheap to
     # amortize an injected repartition of the docs scan.
     docs = load(spark, sf_dir, "documents")
-    return lm_logprob_finish(lm_log_tables(docs))
+    return lm_logprob_finish(lm_log_terms(docs, lm_count_tables(docs)))
 
 
 def _oracle_lm_logprob() -> str:
@@ -3636,7 +3641,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_weight_table(load(spark, sf_dir, "documents"))
 
 
-def _dsir_warr(docs: DataFrame) -> DataFrame:
+def dsir_warr(docs: DataFrame) -> DataFrame:
     """The weight table folded into ONE array row ordered by bucket —
     the broadcastable serve-side artifact (element_at(warr, idx) is the
     whole per-token lookup; buckets are exactly 1..HASH_DIM)."""
@@ -3733,7 +3738,15 @@ def importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return _dsir_ledger(_dsir_scored(docs, _dsir_warr(docs)))
+    return dsir_resample(docs, dsir_warr(docs))
+
+
+def dsir_resample(q: DataFrame, warr: DataFrame) -> DataFrame:
+    """Score and draw the documents of ``q`` against the weight array,
+    then fold the per-source ledger — over the corpus in the batch
+    entry, over the arriving documents (one complete-mode aggregation
+    on the bounded source key) in the stream twin."""
+    return _dsir_ledger(_dsir_scored(q, warr))
 
 
 from flink_gmall_spark.functions.tokenize import TOKEN_SPLIT_RE as _DSIR_RE  # noqa: E402

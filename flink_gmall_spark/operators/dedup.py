@@ -285,22 +285,10 @@ def _band_sigs(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
     return sig_wide, sig
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, materialize_shingles: bool = False
-) -> DataFrame:
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup: banded min-hash signatures generate candidate
     pairs via an equi-join; exact Jaccard verifies. The scale path — work
-    is O(docs x bands) + a join on band signatures, never all-pairs.
-
-    ``materialize_shingles`` snapshots the shingle subtree to parquet and
-    re-reads it, so the three consumers (signatures, verify-a, verify-b)
-    scan a file instead of recomputing tokenize+explode. Measured at
-    sf0.1/local[32]: first (cold-plan) run 4.6 s vs 10.6 s baseline, but
-    steady-state 2.9 s vs 2.8 s — AQE exchange reuse already dedupes the
-    subtree at runtime, so the default stays off; the flag is the right
-    call only for cold single-shot runs or when the shingle set feeds
-    MANY separate actions (e.g. iterative connected components over a
-    fresh corpus)."""
+    is O(docs x bands) + a join on band signatures, never all-pairs."""
     tune(spark)
     # NO spread_small_scan here — measured at sf0.1 (r16, two
     # interleaved pairs): 2.77 vs 2.39 s / 2.48 vs 2.40 s — this plan
@@ -310,20 +298,6 @@ def minhash_lsh_pairs(
     # CHECKPOINT is a real single-task barrier the spread does break.
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
-    if materialize_shingles:
-        import hashlib as _hl
-        import os as _os
-
-        from flink_gmall_spark.scratch import scratch_dir
-
-        # app id in the tag: two concurrent sessions (driver + CI) on the
-        # same sf_dir must not overwrite each other's parquet mid-read —
-        # same race scale._bucketed_table guards against.
-        app = spark.sparkContext.applicationId
-        tag = _hl.md5(f"{_os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-        p = scratch_dir("shingles", tag)
-        sh.write.mode("overwrite").parquet(p)
-        sh = spark.read.parquet(p)
     sig_wide, sig = _band_sigs(sh)
     a = sig.alias("a")
     b = sig.alias("b")
@@ -1365,7 +1339,9 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     HERE because banding calibration is a sampled-corpus job by nature
     (the recall estimate needs thousands of docs, not 100 TB) — the
     full-corpus serving path stays minhash_lsh_pairs, which deliberately
-    does NOT materialize (its docstring records that measurement)."""
+    does NOT materialize: a parquet snapshot of its shingles measured
+    2.9 s vs 2.8 s steady-state at sf0.1/local[32], since AQE exchange
+    reuse already dedupes that subtree at runtime."""
     tune(spark)
     # spread the single-row-group scan so the checkpointed shingle build
     # parallelizes (guide §2.5; identity when splits >= cores)
@@ -2114,6 +2090,19 @@ def substring_runs(docs: DataFrame) -> DataFrame:
     is planned once), one (d1, d2, diag) window + aggregation."""
     g = positional_run_grams(docs)
     return runs_finish(substring_gram_matches(g, g))
+
+
+def substring_probe(q: DataFrame, idx: DataFrame) -> DataFrame:
+    """Gram-match rows of arriving documents ``q`` against the static
+    capped postings ``idx`` (positional_run_grams) — the ingest-time
+    probe of an exact-substring dedup service: does this incoming doc
+    share a verbatim run with anything already in the corpus? The
+    arriving side is the raw, uncapped explode; cap parity is implied,
+    because only under-cap grams exist on the static side. The d1 < d2
+    orientation counts each unordered pair exactly once as the stream
+    replays the corpus. The run assembly is a keyed window, so the
+    bounded match rows drain and runs_finish applies batch-side."""
+    return substring_gram_matches(idx, raw_positional_grams(q))
 
 
 def exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:

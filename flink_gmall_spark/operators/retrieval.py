@@ -60,6 +60,8 @@ join fan-out per term exactly like dedup's MAX_SHINGLE_DF window idiom.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -92,6 +94,8 @@ BM25_SWEEP = [
     (12, 0, ("1.2", "2.2", "0.0", "1.0")),  # no length normalization
 ]
 _DEFAULT_CFG = BM25_SWEEP[0][2]
+
+QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def tf_sat_sql(k1: str, k1p1: str, b: str, omb: str) -> str:
@@ -173,19 +177,28 @@ def query_occurrences(docs: DataFrame) -> DataFrame:
     )
 
 
-def bm25_match(occ: DataFrame, sp: DataFrame, broadcast: bool = True) -> DataFrame:
+def bm25_match(occ: DataFrame, sp: DataFrame) -> DataFrame:
     """Term-level match rows against a tok-keyed posting table, self
     excluded — the ONE definition of the match semantics, shared by the
-    batch entries and the streaming serve twins (which pass
-    broadcast=False: a streaming side cannot take the hint; the
-    stream-static join is already resolved per micro-batch).
+    batch entries and the streaming serve twins.
 
-    The occurrence side is ≤ N_RETR_QUERIES documents of tokens —
+    A batch occurrence side is ≤ N_RETR_QUERIES documents of tokens —
     broadcast — so the corpus-sized postings never shuffle for this join.
+    A streaming side cannot take the hint; its stream-static join is
+    resolved per micro-batch anyway.
     """
-    left = F.broadcast(occ) if broadcast else occ
+    left = occ if occ.isStreaming else F.broadcast(occ)
     return left.join(sp, "tok").filter(
         F.col("doc_id") != F.col("query_id")
+    )
+
+
+def bm25_probe(q: DataFrame, postings: DataFrame) -> DataFrame:
+    """(query_id, doc_id, score_i) match rows of the query documents of
+    ``q`` against a scored posting table — the probe the batch entries
+    run on the corpus and the serve twins run on the query stream."""
+    return bm25_match(query_occurrences(q), postings).select(
+        "query_id", "doc_id", "score_i"
     )
 
 
@@ -213,7 +226,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-key aggregation, one per-query window."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return bm25_finish(bm25_match(query_occurrences(docs), scored_postings(docs)))
+    return bm25_finish(bm25_probe(docs, scored_postings(docs)))
 
 
 # Shared CTE base: postings features + query occurrences + the matched
@@ -276,7 +289,9 @@ FROM bm25_ranked WHERE rank <= {RETR_TOPK}
 """
 
 
-def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def hybrid_rrf(
+    spark: SparkSession, sf_dir: str, lex: QueryFn = bm25_topk
+) -> DataFrame:
     """Hybrid retrieval: Reciprocal Rank Fusion of the BM25 lexical
     top-k (documents) and the brute-force cosine top-k (embeddings;
     ``ann.ann_topk``, the exactness baseline) — the standard two-tower
@@ -300,11 +315,18 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings.vec_id ⊆ documents.doc_id at every shipped SF), so a
     fixture where the two id spaces diverge fails a named test instead
     of silently fusing unrelated items.
+
+    ``lex`` is the lexical leg: the batch index by default, or the
+    serve twin of a live query stream (stream_bm25_serve), whose rank
+    list is drained first, so the fusion always runs batch-side — rank
+    windows cannot follow an append stream. The same parameter, with
+    the same meaning, is taken by every fusion, eval and mining entry
+    below that consumes the BM25 rank list.
     """
     from flink_gmall_spark.operators.ann import ann_topk
 
     tune(spark)
-    lex = bm25_topk(spark, sf_dir).select(
+    lex_ranks = lex(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
     sem = ann_topk(spark, sf_dir).select(
@@ -312,7 +334,7 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").alias("sem_rank"),
     )
-    return rrf_finish(lex, sem)
+    return rrf_finish(lex_ranks, sem)
 
 
 def rrf_finish(lex: DataFrame, sem: DataFrame) -> DataFrame:
@@ -429,7 +451,9 @@ RRF_K_SWEEP = [RRF_K, 10, 120, 480]
 assert RRF_K_SWEEP[0] == RRF_K
 
 
-def rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rrf_k_sweep(
+    spark: SparkSession, sf_dir: str, lex: QueryFn = bm25_topk
+) -> DataFrame:
     """RRF_K CALIBRATION SWEEP — the bm25_param_sweep discipline applied
     to the fusion knob: every K in RRF_K_SWEEP fused through ONE shared
     pass over the two rank lists, priced by top-k agreement with the
@@ -448,11 +472,11 @@ def rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: each 1/(K+rank) is one correctly-rounded division with the
     NULL-propagation idiom of rrf_finish (absent rank → NULL → COALESCE
     0.0), the two terms add in fixed written order, and only integer
-    counts reach the output."""
+    counts reach the output. ``lex``: the lexical leg (see hybrid_rrf)."""
     from flink_gmall_spark.operators.ann import ann_topk
 
     tune(spark)
-    lex = bm25_topk(spark, sf_dir).select(
+    lex_ranks = lex(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
     sem = ann_topk(spark, sf_dir).select(
@@ -460,7 +484,7 @@ def rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").alias("sem_rank"),
     )
-    return rrf_k_sweep_finish(lex, sem)
+    return rrf_k_sweep_finish(lex_ranks, sem)
 
 
 def rrf_k_sweep_finish(lex: DataFrame, sem: DataFrame) -> DataFrame:
@@ -607,8 +631,16 @@ def bm25_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return param_sweep_finish(
-        bm25_match(query_occurrences(docs), posting_features(docs))
+    return param_sweep_finish(sweep_probe(docs, posting_features(docs)))
+
+
+def sweep_probe(q: DataFrame, feat: DataFrame) -> DataFrame:
+    """The matched raw posting features of the query documents of ``q``
+    — the sweep needs tf/df/dl/stats, not one baked score, so every
+    config prices from the same matched row. Run on the corpus by the
+    batch entry and on the query stream by the serve twin."""
+    return bm25_match(query_occurrences(q), feat).select(
+        "query_id", "doc_id", "tf", "df", "dl", "n_docs", "total_len"
     )
 
 
@@ -928,9 +960,7 @@ def bm25_topk_logidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructs the divergence — that divergence is the point."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return bm25_finish(
-        bm25_match(query_occurrences(docs), logidf_scored_postings(docs))
-    )
+    return bm25_finish(bm25_probe(docs, logidf_scored_postings(docs)))
 
 
 def _logidf_ranked_ctes() -> str:
@@ -1067,17 +1097,20 @@ def retrieval_eval_finish(lex: DataFrame, sem: DataFrame) -> DataFrame:
     )
 
 
-def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+def retrieval_eval(
+    spark: SparkSession, sf_dir: str, lex: QueryFn = bm25_topk
+) -> DataFrame:
     """The evaluation ledger over the shipped retrievers: BM25 lexical
-    list and its RRF fusion, judged by the exact cosine top-k."""
+    list and its RRF fusion, judged by the exact cosine top-k. ``lex``:
+    the lexical leg (see hybrid_rrf)."""
     from flink_gmall_spark.operators.ann import ann_topk
 
     tune(spark)
-    lex = bm25_topk(spark, sf_dir).select("query_id", "doc_id", "rank")
+    lex_ranks = lex(spark, sf_dir).select("query_id", "doc_id", "rank")
     sem = ann_topk(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
-    return retrieval_eval_finish(lex, sem)
+    return retrieval_eval_finish(lex_ranks, sem)
 
 
 def _oracle_retrieval_eval() -> str:
@@ -1152,7 +1185,9 @@ NEG_SAMPLE_HEX = "40"
 NEG_SALTS = 32
 
 
-def retrieval_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def retrieval_triplets(
+    spark: SparkSession, sf_dir: str, lex: QueryFn = bm25_topk
+) -> DataFrame:
     """TRIPLET MINING for embedding-model training — the standard
     (query, positive, negative) data builder over the lexical index:
     positives are each query's top-POS_K BM25 documents (lexical
@@ -1171,10 +1206,11 @@ def retrieval_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_RETR_QUERIES broadcast query list, hash-filtered to ~1/4 BEFORE
     the anti-join and window (pushdown-visible), then ranked per query;
     positives and the final pos × neg pairing are query-bounded.
+    ``lex``: the lexical leg (see hybrid_rrf).
     """
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return triplets_finish(bm25_topk(spark, sf_dir), docs)
+    return triplets_finish(lex(spark, sf_dir), docs)
 
 
 def triplets_finish(topk: DataFrame, docs: DataFrame) -> DataFrame:
@@ -1359,7 +1395,9 @@ def rrf_weighted_finish(
     )
 
 
-def rrf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rrf_weighted(
+    spark: SparkSession, sf_dir: str, lex: QueryFn = bm25_topk
+) -> DataFrame:
     """WEIGHTED 3-SYSTEM RRF — hybrid_rrf extended with the logged-idf
     lexical list as a half-weight third voter. Plan: all three rank
     lists are query-bounded, so the fusion is two broadcast-able
@@ -1367,11 +1405,12 @@ def rrf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     build, ln chain, cosine scan) lives in the upstream retrievers and
     the first two share their postings-feature subtree. Same fixture
     contract as hybrid_rrf (doc_id ≡ vec_id, pinned by
-    test_fixture_vec_id_doc_id_alignment)."""
+    test_fixture_vec_id_doc_id_alignment). ``lex``: the unlogged
+    lexical leg (see hybrid_rrf); the logged-idf leg stays batch."""
     from flink_gmall_spark.operators.ann import ann_topk
 
     tune(spark)
-    lex = bm25_topk(spark, sf_dir).select(
+    lex_ranks = lex(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
     sem = ann_topk(spark, sf_dir).select(
@@ -1382,7 +1421,7 @@ def rrf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     lgx = bm25_topk_logidf(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lgx_rank")
     )
-    return rrf_weighted_finish(lex, sem, lgx)
+    return rrf_weighted_finish(lex_ranks, sem, lgx)
 
 
 def _oracle_rrf_weighted() -> str:
@@ -1497,8 +1536,10 @@ def bm25_negatives_finish(
     )
 
 
-def bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch composition: BM25 candidates from the lexical index,
+def bm25_hard_negatives(
+    spark: SparkSession, sf_dir: str, lex: QueryFn = bm25_topk
+) -> DataFrame:
+    """BM25 candidates from the lexical leg ``lex`` (see hybrid_rrf),
     exact hard negatives from ann.hard_negatives as the recall
     denominator."""
     from flink_gmall_spark.operators.ann import _with_norm, hard_negatives
@@ -1508,7 +1549,7 @@ def bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = hard_negatives(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("doc_id")
     )
-    return bm25_negatives_finish(bm25_topk(spark, sf_dir), emb, exact)
+    return bm25_negatives_finish(lex(spark, sf_dir), emb, exact)
 
 
 def _oracle_bm25_hard_negatives() -> str:
@@ -1625,21 +1666,20 @@ def query_bigram_occurrences(docs: DataFrame) -> DataFrame:
     ).select("query_id", "bg.w1", "bg.w2")
 
 
-def phrase_adjacent_matches(
-    qbg: DataFrame, idx: DataFrame, broadcast: bool = True
-) -> DataFrame:
+def phrase_adjacent_matches(qbg: DataFrame, idx: DataFrame) -> DataFrame:
     """Both positional legs — one (query_id, doc_id) row per adjacency
     match (a query pair occurrence landing on a corpus position pair).
-    The ONE definition shared by the batch entry and the serve twin
-    (broadcast=False: a streaming side cannot take the hint, and the
-    w2 vocabulary prune below would make the static leg depend on the
-    stream — the serve twin's adjacency leg joins the full index per
-    micro-batch instead, which is exactly what a deployed endpoint's
-    resident index does). Draining happens AFTER leg 2 in the serve
-    twin: adjacency matches are output-bounded (they aggregate to the
-    top-k table), while leg-1 rows are posting-list-sized — an
+    The ONE definition shared by the batch entry and the serve twin. A
+    streaming ``qbg`` takes neither the broadcast hint nor the w2
+    vocabulary prune below (the prune would make the static leg depend
+    on the stream): the serve twin's adjacency leg joins the full index
+    per micro-batch instead, which is exactly what a deployed
+    endpoint's resident index does. Draining happens AFTER leg 2 in the
+    serve twin: adjacency matches are output-bounded (they aggregate to
+    the top-k table), while leg-1 rows are posting-list-sized — an
     order-of-magnitude checkpoint/sink difference."""
-    left = F.broadcast(qbg) if broadcast else qbg
+    batch = not qbg.isStreaming
+    left = F.broadcast(qbg) if batch else qbg
     p1 = idx.select(F.col("tok").alias("w1"), "doc_id", "pos")
     m1 = (
         left.join(p1, "w1")
@@ -1649,7 +1689,7 @@ def phrase_adjacent_matches(
     p2 = idx.select(
         F.col("tok").alias("w2"), "doc_id", (F.col("pos") - 1).alias("pos")
     )
-    if broadcast:
+    if batch:
         # batch: prune the adjacency leg to the query vocabulary (a
         # broadcast semi-join — the shuffle on (doc_id, pos) then only
         # ever moves query-term postings, never the full index)
@@ -1686,9 +1726,14 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence IS the test."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return phrase_finish(
-        phrase_adjacent_matches(query_bigram_occurrences(docs), pos_index(docs))
-    )
+    return phrase_finish(phrase_probe(docs, pos_index(docs)))
+
+
+def phrase_probe(q: DataFrame, idx: DataFrame) -> DataFrame:
+    """Adjacency matches of the query documents of ``q`` against the
+    positional index — run on the corpus by the batch entry and on the
+    query stream by the serve twin."""
+    return phrase_adjacent_matches(query_bigram_occurrences(q), idx)
 
 
 ORACLE_PHRASE_SEARCH = f"""
@@ -1759,24 +1804,25 @@ FROM pranked WHERE rank <= {RETR_TOPK}
 PROX_WINDOW = 5  # ordered window: 1 <= p2 - p1 <= 5
 
 
-def _position_pair_rows(
-    qbg: DataFrame, idx: DataFrame, broadcast: bool = True
-) -> DataFrame:
+def _position_pair_rows(qbg: DataFrame, idx: DataFrame) -> DataFrame:
     """One (query_id, w2, doc_id, p1, p2) row per (adjacent query pair ×
     matched corpus position pair), BEFORE any window filter — the shared
     two-leg core of every positional-window consumer (ADVICE r15: the
     SDM fusion had inlined a near-verbatim copy of this machinery; one
     definition keeps the df-cap/broadcast discipline from drifting).
     Leg 1 fans the (broadcast) query pairs onto the w1 postings
-    map-side; leg 2 is an equi-join on (doc_id, w2) — under broadcast
-    the band leg is first pruned to the query vocabulary (broadcast
-    semi-join) so the shuffle only ever moves query-term postings.
+    map-side; leg 2 is an equi-join on (doc_id, w2) — for a batch
+    ``qbg`` the band leg is first pruned to the query vocabulary
+    (broadcast semi-join) so the shuffle only ever moves query-term
+    postings; a streaming ``qbg`` takes neither (the
+    phrase_adjacent_matches contract).
     Callers apply their window inequality, which Catalyst folds into
     the join as its range residual, so the executed plan is unchanged
     from the former inline forms (string-key equi join, NOT df["col"]
     conditions: both legs share the idx lineage, the classic self-join
     ambiguity)."""
-    left = F.broadcast(qbg) if broadcast else qbg
+    batch = not qbg.isStreaming
+    left = F.broadcast(qbg) if batch else qbg
     p1 = idx.select(F.col("tok").alias("w1"), "doc_id", F.col("pos").alias("p1"))
     m1 = (
         left.join(p1, "w1")
@@ -1784,7 +1830,7 @@ def _position_pair_rows(
         .select("query_id", "w2", "doc_id", "p1")
     )
     p2 = idx.select(F.col("tok").alias("w2"), "doc_id", F.col("pos").alias("p2"))
-    if broadcast:
+    if batch:
         p2 = p2.join(
             F.broadcast(qbg.select(F.col("w2").alias("tok")).distinct()),
             F.col("w2") == F.col("tok"),
@@ -1794,15 +1840,12 @@ def _position_pair_rows(
 
 
 def proximity_matches(
-    qbg: DataFrame,
-    idx: DataFrame,
-    broadcast: bool = True,
-    ordered: bool = True,
+    qbg: DataFrame, idx: DataFrame, ordered: bool = True
 ) -> DataFrame:
     """One (query_id, doc_id, span) row per within-window position pair
     — the proximity analogue of phrase_adjacent_matches, shared by the
-    batch entries and the serve twins (broadcast=False for the stream
-    side, same contract as the phrase twin). ordered=True is the
+    batch entries and the serve twins (same streaming contract as the
+    phrase twin). ordered=True is the
     sequential-dependence model's ORDERED window (1 <= p2 - p1 <=
     PROX_WINDOW, span = the signed gap); ordered=False its UNORDERED
     window (1 <= |p2 - p1| <= PROX_WINDOW, span = the magnitude — both
@@ -1812,7 +1855,7 @@ def proximity_matches(
     pairs onto the w1 postings map-side; leg 2 is an equi-join on
     (doc_id, w2) with the window inequality as the hash join's range
     residual — the shuffle moves only w2-postings of docs that matched
-    leg 1 (and under broadcast, only query-vocabulary postings), each
+    leg 1 (and for a batch ``qbg``, only query-vocabulary postings), each
     (doc_id, w2) group no larger than that term's in-document
     positions."""
     gap = (
@@ -1821,7 +1864,7 @@ def proximity_matches(
         else F.abs(F.col("p2") - F.col("p1"))
     )
     return (
-        _position_pair_rows(qbg, idx, broadcast)
+        _position_pair_rows(qbg, idx)
         .filter((gap >= 1) & (gap <= PROX_WINDOW))
         .select(
             "query_id",
@@ -1863,9 +1906,16 @@ def proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, one per-query window."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return proximity_finish(
-        proximity_matches(query_bigram_occurrences(docs), pos_index(docs))
-    )
+    return proximity_finish(proximity_probe(docs, pos_index(docs)))
+
+
+def proximity_probe(
+    q: DataFrame, idx: DataFrame, ordered: bool = True
+) -> DataFrame:
+    """Window matches of the query documents of ``q`` against the
+    positional index — run on the corpus by the batch entries and on
+    the query stream by the serve twins."""
+    return proximity_matches(query_bigram_occurrences(q), idx, ordered=ordered)
 
 
 ORACLE_PROXIMITY_TOPK = f"""
@@ -1927,11 +1977,7 @@ def proximity_unordered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order still scores."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return proximity_finish(
-        proximity_matches(
-            query_bigram_occurrences(docs), pos_index(docs), ordered=False
-        )
-    )
+    return proximity_finish(proximity_probe(docs, pos_index(docs), ordered=False))
 
 
 ORACLE_PROXIMITY_UNORDERED = f"""

@@ -11,7 +11,6 @@ distinct pre-dedups on the salted key).
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import os
 
@@ -102,11 +101,9 @@ def _bucketed_df_table(
     # must not overwrite each other's files mid-read — same reason the
     # stream staging dir renames atomically. Within a session the catalog
     # check makes materialization once-only.
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-    name = f"fgs_bkt_{label}_{tag}"
+    name = f"fgs_bkt_{label}_{session_tag(spark, sf_dir)}"
     if not spark.catalog.tableExists(name):
         path = scratch_dir("bucketed", name)
         (
@@ -313,12 +310,10 @@ def _date_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     partitioned parquet layout — the standard lake layout at 100 TB,
     where a day predicate must prune to one directory instead of
     scanning the corpus. Paid once; every pruning entry reuses it."""
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.sources import load
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-    path = scratch_dir("events_by_dt", tag)
+    path = scratch_dir("events_by_dt", session_tag(spark, sf_dir))
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         (
@@ -365,12 +360,10 @@ GROUP BY event_type
 def _date_dim(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the calendar dim next to the partitioned fact: one row
     per event day with its ISO weekday — the dim side of the star join."""
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.sources import load
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-    path = scratch_dir("date_dim", tag)
+    path = scratch_dir("date_dim", session_tag(spark, sf_dir))
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         (
@@ -523,7 +516,7 @@ def epoch_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction itself.
     """
     from flink_gmall_spark.functions.parity import MONEY
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
@@ -531,10 +524,7 @@ def epoch_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The nonce makes each invocation's store/compacted paths unique within
     # one Spark application — repeated or concurrent calls in the same app
     # can no longer race on the overwrite or read mixed file sets.
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
-        f"|{next(_COMPACT_CALLS)}".encode()
-    ).hexdigest()[:12]
+    tag = session_tag(spark, sf_dir, next(_COMPACT_CALLS))
     global LAST_COMPACTION_BASE
     base = LAST_COMPACTION_BASE = scratch_dir("compaction", tag)
     store = os.path.join(base, "store")
@@ -732,15 +722,12 @@ def zorder_rewrite(spark: SparkSession, sf_dir: str) -> str:
     clustering-proof test): returns the directory of the z-ordered
     store. Nonce-tagged per call — concurrent invocations never race on
     the overwrite (the epoch_compaction discipline)."""
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
     tune(spark)
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
-        f"|{next(_ZORDER_CALLS)}".encode()
-    ).hexdigest()[:12]
+    tag = session_tag(spark, sf_dir, next(_ZORDER_CALLS))
     out = os.path.join(scratch_dir("zorder", tag), "clustered")
 
     ev = load(spark, sf_dir, "events").select(

@@ -15,6 +15,7 @@ every entry regardless of order.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -254,7 +255,7 @@ _register("stream_keyword_stats", stream_jobs.stream_keyword_stats, dws.ORACLE_K
 _register("stream_windowed_append", stream_jobs.twin("events", stream_jobs.windowed_append_stats, "append"), stream_jobs.ORACLE_WINDOWED_APPEND, tags=("T5", "T6", "T7", "streaming", "append-mode"))
 _register("stream_left_outer_join", stream_jobs.stream_left_outer_interval_join, stream_jobs.ORACLE_LEFT_OUTER_INTERVAL, tags=("J1", "T4", "streaming", "outer-join"))
 _register("stream_intra_doc_chunks", stream_jobs.twin("documents", dedup.intra_doc_transform, "append"), dedup.ORACLE_INTRA_DOC_CHUNKS, tags=("dedup", "streaming", "ingestion", "map-only"))
-_register("stream_pq_encode", stream_jobs.stream_pq_encode, ann.ORACLE_PQ_ENCODE, tags=("similarity", "quantization", "streaming", "stream-static", "train-serve"))
+_register("stream_pq_encode", stream_jobs.twin("embeddings", ann.pq_encode_probe, "append", index=ann.pq_vectors), ann.ORACLE_PQ_ENCODE, tags=("similarity", "quantization", "streaming", "stream-static", "train-serve"))
 _register("stream_pq_index_serve", stream_jobs.stream_pq_index_serve, ann.ORACLE_PQ_ADC_TOPK, tags=("similarity", "quantization", "streaming", "T9", "S6", "e2e", "chained-queries"))
 _register("stream_event_transitions", stream_state.event_transitions_stream, ads.ORACLE_EVENT_TRANSITIONS, tags=("path-analysis", "markov", "streaming", "T3-generalized", "stateful"))
 _register("stream_last_touch_attribution", stream_state.last_touch_attribution_stream, ads.ORACLE_LAST_TOUCH_ATTRIBUTION, tags=("attribution", "path-analysis", "streaming", "stateful", "carry-window"))
@@ -390,53 +391,57 @@ _register("curation_seq_len_sweep", curation.seq_len_sweep, curation.ORACLE_SEQ_
 _register("stream_seq_len_sweep", stream_jobs.twin("documents", curation.seq_len_wide, "complete", curation.seq_len_finish), curation.ORACLE_SEQ_LEN_SWEEP, tags=("streaming", "curation", "ml-training", "packing", "calibration", "complete-mode"))
 _register("curation_dsir_weights", curation.dsir_weights, curation.ORACLE_DSIR_WEIGHTS, tags=("curation", "ml-training", "importance-sampling", "feature-hashing", "calibration"))
 _register("curation_importance_resample", curation.importance_resample, curation.ORACLE_IMPORTANCE_RESAMPLE, bench=True, tags=("curation", "ml-training", "importance-sampling", "sampling", "deterministic"))
-_register("stream_importance_resample", stream_jobs.stream_importance_resample, curation.ORACLE_IMPORTANCE_RESAMPLE, tags=("streaming", "curation", "ml-training", "importance-sampling", "serving", "complete-mode"))
+_register("stream_importance_resample", stream_jobs.twin("documents", curation.dsir_resample, "complete", index=curation.dsir_warr), curation.ORACLE_IMPORTANCE_RESAMPLE, tags=("streaming", "curation", "ml-training", "importance-sampling", "serving", "complete-mode"))
 _register("stream_dsir_weights", stream_jobs.twin("documents", curation.dsir_counts, "complete", curation.dsir_weight_finish), curation.ORACLE_DSIR_WEIGHTS, tags=("streaming", "curation", "ml-training", "importance-sampling", "feature-hashing", "complete-mode"))
 _register("text_bm25_topk", retrieval.bm25_topk, retrieval.ORACLE_BM25_TOPK, bench=True, tags=("text-analysis", "retrieval", "lexical", "bm25", "top-n"))
 _register("sim_hybrid_rrf", retrieval.hybrid_rrf, retrieval.ORACLE_HYBRID_RRF, tags=("similarity", "retrieval", "hybrid", "rank-fusion", "top-n"))
-_register("stream_bm25_serve", stream_jobs.stream_bm25_serve, retrieval.ORACLE_BM25_TOPK, tags=("streaming", "retrieval", "lexical", "bm25", "serving", "append-mode"))
+# the lexical serve twin: the query stream probes the static BM25 score
+# table; it is also the streamed lexical leg of the fusion, eval and
+# mining twins below
+_bm25_serve = stream_jobs.twin("documents", retrieval.bm25_probe, "append", retrieval.bm25_finish, index=retrieval.scored_postings)
+_register("stream_bm25_serve", _bm25_serve, retrieval.ORACLE_BM25_TOPK, tags=("streaming", "retrieval", "lexical", "bm25", "serving", "append-mode"))
 _register("text_bm25_param_sweep", retrieval.bm25_param_sweep, retrieval.ORACLE_BM25_PARAM_SWEEP, bench=True, tags=("text-analysis", "retrieval", "bm25", "calibration", "self-measurement", "single-pass"))
-_register("stream_hybrid_rrf_serve", stream_jobs.stream_hybrid_rrf_serve, retrieval.ORACLE_HYBRID_RRF, tags=("streaming", "retrieval", "hybrid", "rank-fusion", "serving", "append-mode"))
+_register("stream_hybrid_rrf_serve", functools.partial(retrieval.hybrid_rrf, lex=_bm25_serve), retrieval.ORACLE_HYBRID_RRF, tags=("streaming", "retrieval", "hybrid", "rank-fusion", "serving", "append-mode"))
 _register("scale_bucketed_postings_serve", scale.bucketed_postings_serve, retrieval.ORACLE_BM25_TOPK, tags=("scale", "retrieval", "bm25", "bucketing", "zero-shuffle-join", "serving"))
 _register("text_query_expansion_prf", retrieval.query_expansion_prf, retrieval.ORACLE_QUERY_EXPANSION_PRF, tags=("text-analysis", "retrieval", "query-expansion", "relevance-feedback", "top-n"))
 _register("sim_fusion_gain_report", retrieval.fusion_gain_report, retrieval.ORACLE_FUSION_GAIN, tags=("similarity", "retrieval", "hybrid", "rank-fusion", "evaluation", "self-measurement"))
 _register("stream_query_expansion_prf", stream_jobs.stream_query_expansion_prf, retrieval.ORACLE_QUERY_EXPANSION_PRF, tags=("streaming", "retrieval", "query-expansion", "relevance-feedback", "serving", "append-mode"))
 _register("curation_retrieval_triplets", retrieval.retrieval_triplets, retrieval.ORACLE_RETRIEVAL_TRIPLETS, tags=("curation", "retrieval", "ml-training", "triplet-mining", "sampling", "deterministic"))
-_register("stream_retrieval_triplets", stream_jobs.stream_retrieval_triplets, retrieval.ORACLE_RETRIEVAL_TRIPLETS, tags=("streaming", "curation", "retrieval", "ml-training", "triplet-mining", "serving", "append-mode"))
+_register("stream_retrieval_triplets", functools.partial(retrieval.retrieval_triplets, lex=_bm25_serve), retrieval.ORACLE_RETRIEVAL_TRIPLETS, tags=("streaming", "curation", "retrieval", "ml-training", "triplet-mining", "serving", "append-mode"))
 
 # --- Round-12 additions (VERDICT r11 asks) -----------------------------------
 _register("text_bm25_topk_logidf", retrieval.bm25_topk_logidf, retrieval.ORACLE_BM25_TOPK_LOGIDF, bench=True, tags=("text-analysis", "retrieval", "lexical", "bm25", "logged-idf", "top-n"))
 _register("sim_rrf_k_sweep", retrieval.rrf_k_sweep, retrieval.ORACLE_RRF_K_SWEEP, tags=("similarity", "retrieval", "hybrid", "rank-fusion", "calibration", "self-measurement", "single-pass"))
 _register("scale_bucketed_prf_serve", scale.bucketed_prf_serve, retrieval.ORACLE_QUERY_EXPANSION_PRF, tags=("scale", "retrieval", "query-expansion", "bucketing", "zero-shuffle-join", "serving"))
 _register("scale_bucketed_triplets_serve", scale.bucketed_triplets_serve, retrieval.ORACLE_RETRIEVAL_TRIPLETS, tags=("scale", "retrieval", "triplet-mining", "bucketing", "zero-shuffle-join", "serving"))
-_register("stream_bm25_logidf_serve", stream_jobs.stream_bm25_logidf_serve, retrieval.ORACLE_BM25_TOPK_LOGIDF, tags=("streaming", "retrieval", "lexical", "bm25", "logged-idf", "serving", "append-mode"))
-_register("stream_rrf_k_sweep", stream_jobs.stream_rrf_k_sweep, retrieval.ORACLE_RRF_K_SWEEP, tags=("streaming", "retrieval", "hybrid", "rank-fusion", "calibration", "serving", "append-mode"))
+_register("stream_bm25_logidf_serve", stream_jobs.twin("documents", retrieval.bm25_probe, "append", retrieval.bm25_finish, index=retrieval.logidf_scored_postings), retrieval.ORACLE_BM25_TOPK_LOGIDF, tags=("streaming", "retrieval", "lexical", "bm25", "logged-idf", "serving", "append-mode"))
+_register("stream_rrf_k_sweep", functools.partial(retrieval.rrf_k_sweep, lex=_bm25_serve), retrieval.ORACLE_RRF_K_SWEEP, tags=("streaming", "retrieval", "hybrid", "rank-fusion", "calibration", "serving", "append-mode"))
 _register("sim_retrieval_eval", retrieval.retrieval_eval, retrieval.ORACLE_RETRIEVAL_EVAL, tags=("similarity", "retrieval", "evaluation", "mrr", "ndcg", "self-measurement"))
-_register("stream_retrieval_eval", stream_jobs.stream_retrieval_eval, retrieval.ORACLE_RETRIEVAL_EVAL, tags=("streaming", "retrieval", "evaluation", "mrr", "ndcg", "serving", "append-mode"))
+_register("stream_retrieval_eval", functools.partial(retrieval.retrieval_eval, lex=_bm25_serve), retrieval.ORACLE_RETRIEVAL_EVAL, tags=("streaming", "retrieval", "evaluation", "mrr", "ndcg", "serving", "append-mode"))
 _register("text_zipf_slope", textstats.zipf_slope, textstats.ORACLE_ZIPF_SLOPE, tags=("text", "quality", "corpus-stats", "zipf", "observability", "self-measurement"))
 _register("stream_zipf_slope", stream_jobs.twin("documents", textstats.corpus_cf, "complete", textstats.zipf_finish), textstats.ORACLE_ZIPF_SLOPE, tags=("streaming", "text", "quality", "corpus-stats", "zipf", "complete-mode"))
 _register("curation_lm_logprob", curation.lm_logprob_score, curation.ORACLE_LM_LOGPROB, bench=True, tags=("curation", "text", "quality", "perplexity-filter", "lm-scoring", "log-prob"))
-_register("stream_lm_logprob", stream_jobs.stream_lm_logprob, curation.ORACLE_LM_LOGPROB, tags=("streaming", "curation", "text", "quality", "perplexity-filter", "lm-scoring", "serving", "append-mode"))
+_register("stream_lm_logprob", stream_jobs.twin("documents", curation.lm_log_terms, "append", curation.lm_logprob_finish, index=curation.lm_count_tables), curation.ORACLE_LM_LOGPROB, tags=("streaming", "curation", "text", "quality", "perplexity-filter", "lm-scoring", "serving", "append-mode"))
 _register("text_token_entropy", textstats.token_entropy, textstats.ORACLE_TOKEN_ENTROPY, tags=("text", "quality", "diversity", "entropy", "map-only"))
 _register("stream_token_entropy", stream_jobs.twin("documents", textstats.entropy_terms, "append", textstats.entropy_finish), textstats.ORACLE_TOKEN_ENTROPY, tags=("streaming", "text", "quality", "diversity", "entropy", "append-mode"))
 _register("text_phrase_search", retrieval.phrase_search, retrieval.ORACLE_PHRASE_SEARCH, bench=True, tags=("text-analysis", "retrieval", "lexical", "phrase", "positional-index", "plan-variant", "top-n"))
-_register("stream_phrase_serve", stream_jobs.stream_phrase_serve, retrieval.ORACLE_PHRASE_SEARCH, tags=("streaming", "retrieval", "lexical", "phrase", "positional-index", "serving", "append-mode"))
+_register("stream_phrase_serve", stream_jobs.twin("documents", retrieval.phrase_probe, "append", retrieval.phrase_finish, index=retrieval.pos_index), retrieval.ORACLE_PHRASE_SEARCH, tags=("streaming", "retrieval", "lexical", "phrase", "positional-index", "serving", "append-mode"))
 _register("sim_rrf_weighted", retrieval.rrf_weighted, retrieval.ORACLE_RRF_WEIGHTED, tags=("similarity", "retrieval", "hybrid", "rank-fusion", "weighted", "three-system"))
-_register("stream_rrf_weighted_serve", stream_jobs.stream_rrf_weighted_serve, retrieval.ORACLE_RRF_WEIGHTED, tags=("streaming", "retrieval", "hybrid", "rank-fusion", "weighted", "serving", "append-mode"))
+_register("stream_rrf_weighted_serve", functools.partial(retrieval.rrf_weighted, lex=_bm25_serve), retrieval.ORACLE_RRF_WEIGHTED, tags=("streaming", "retrieval", "hybrid", "rank-fusion", "weighted", "serving", "append-mode"))
 _register("sim_bm25_hard_negatives", retrieval.bm25_hard_negatives, retrieval.ORACLE_BM25_HARD_NEGATIVES, tags=("similarity", "retrieval", "ml-training", "hard-negatives", "recall-report", "self-measurement"))
-_register("stream_bm25_hard_negatives", stream_jobs.stream_bm25_hard_negatives, retrieval.ORACLE_BM25_HARD_NEGATIVES, tags=("streaming", "retrieval", "ml-training", "hard-negatives", "serving", "append-mode"))
-_register("stream_bm25_param_sweep", stream_jobs.stream_bm25_param_sweep, retrieval.ORACLE_BM25_PARAM_SWEEP, tags=("streaming", "retrieval", "lexical", "bm25", "calibration", "serving", "append-mode"))
+_register("stream_bm25_hard_negatives", functools.partial(retrieval.bm25_hard_negatives, lex=_bm25_serve), retrieval.ORACLE_BM25_HARD_NEGATIVES, tags=("streaming", "retrieval", "ml-training", "hard-negatives", "serving", "append-mode"))
+_register("stream_bm25_param_sweep", stream_jobs.twin("documents", retrieval.sweep_probe, "append", retrieval.param_sweep_finish, index=retrieval.posting_features), retrieval.ORACLE_BM25_PARAM_SWEEP, tags=("streaming", "retrieval", "lexical", "bm25", "calibration", "serving", "append-mode"))
 _register("scale_bucketed_phrase_serve", scale.bucketed_phrase_serve, retrieval.ORACLE_PHRASE_SEARCH, tags=("scale", "retrieval", "lexical", "phrase", "positional-index", "bucketing", "zero-shuffle-join", "serving"))
 
 # --- round 13: proximity retrieval + exact-substring dedup -------------------
 _register("text_proximity_topk", retrieval.proximity_topk, retrieval.ORACLE_PROXIMITY_TOPK, bench=True, tags=("text-analysis", "retrieval", "lexical", "proximity", "positional-index", "band-join", "top-n"))
-_register("stream_proximity_serve", stream_jobs.stream_proximity_serve, retrieval.ORACLE_PROXIMITY_TOPK, tags=("streaming", "retrieval", "lexical", "proximity", "positional-index", "serving", "append-mode"))
+_register("stream_proximity_serve", stream_jobs.twin("documents", retrieval.proximity_probe, "append", retrieval.proximity_finish, index=retrieval.pos_index), retrieval.ORACLE_PROXIMITY_TOPK, tags=("streaming", "retrieval", "lexical", "proximity", "positional-index", "serving", "append-mode"))
 _register("text_proximity_unordered", retrieval.proximity_unordered_topk, retrieval.ORACLE_PROXIMITY_UNORDERED, tags=("text-analysis", "retrieval", "lexical", "proximity", "unordered-window", "positional-index", "band-join", "top-n"))
-_register("stream_proximity_unordered_serve", stream_jobs.stream_proximity_unordered_serve, retrieval.ORACLE_PROXIMITY_UNORDERED, tags=("streaming", "retrieval", "lexical", "proximity", "unordered-window", "serving", "append-mode"))
+_register("stream_proximity_unordered_serve", stream_jobs.twin("documents", functools.partial(retrieval.proximity_probe, ordered=False), "append", retrieval.proximity_finish, index=retrieval.pos_index), retrieval.ORACLE_PROXIMITY_UNORDERED, tags=("streaming", "retrieval", "lexical", "proximity", "unordered-window", "serving", "append-mode"))
 _register("dedup_exact_substring_runs", dedup.exact_substring_runs, dedup.ORACLE_EXACT_SUBSTRING_RUNS, bench=True, tags=("dedup", "exact-substring", "positional-index", "islands"))
 _register("dedup_exact_substring_ledger", dedup.exact_substring_ledger, dedup.ORACLE_EXACT_SUBSTRING_LEDGER, tags=("dedup", "exact-substring", "interval-merge", "quality"))
 _register("dedup_substring_coverage_audit", dedup.substring_coverage_audit, dedup.ORACLE_SUBSTRING_COVERAGE_AUDIT, tags=("dedup", "exact-substring", "evaluation", "recall-report", "self-measurement"))
-_register("stream_exact_substring_probe", stream_jobs.stream_exact_substring_probe, dedup.ORACLE_EXACT_SUBSTRING_RUNS, tags=("streaming", "dedup", "exact-substring", "serving", "append-mode"))
+_register("stream_exact_substring_probe", stream_jobs.twin("documents", dedup.substring_probe, "append", dedup.runs_finish, index=dedup.positional_run_grams), dedup.ORACLE_EXACT_SUBSTRING_RUNS, tags=("streaming", "dedup", "exact-substring", "serving", "append-mode"))
 _register("scale_bucketed_substring_serve", scale.bucketed_substring_serve, dedup.ORACLE_EXACT_SUBSTRING_RUNS, tags=("scale", "dedup", "exact-substring", "bucketing", "zero-shuffle-join", "serving"))
 _register("curation_strip_dup_spans", dedup.strip_dup_spans, dedup.ORACLE_STRIP_DUP_SPANS, tags=("curation", "dedup", "exact-substring", "corpus-rewrite", "e2e"))
 _register("text_sdm_topk", retrieval.sdm_topk, retrieval.ORACLE_SDM_TOPK, bench=True, tags=("text-analysis", "retrieval", "lexical", "proximity", "sdm", "rank-fusion", "positional-index", "top-n"))
@@ -529,7 +534,14 @@ _REGISTRATION_ORDER = tuple(_REGISTRY)
 # row: declare each here in the commit that changes it, so the next
 # correctness round re-verifies it (same-round re-verification). Clear a
 # name once a ledger file records it green again.
-_REVERIFY_HEAD: tuple[str, ...] = ()
+_REVERIFY_HEAD: tuple[str, ...] = (
+    # the drained lexical list / query vocabulary is no longer
+    # localCheckpointed: an append drain is a parquet read, which Spark
+    # can self-join
+    "stream_retrieval_eval",
+    "stream_bm25_hard_negatives",
+    "stream_query_expansion_prf",
+)
 
 _SAMPLE_PRIORITY = staged_window(
     _REGISTRATION_ORDER, last_green_rounds(), _REVERIFY_HEAD

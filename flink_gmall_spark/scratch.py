@@ -18,6 +18,7 @@ guarantees no ad-hoc ``tempfile.gettempdir()`` join provides:
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import shutil
 import tempfile
@@ -65,6 +66,16 @@ def _sweep_stale() -> None:
                 continue
             if stale and d not in _created:
                 shutil.rmtree(d, ignore_errors=True)
+
+
+def session_tag(spark, sf_dir: str, *extra) -> str:
+    """12 hex digits naming per-session scratch: the md5 of the resolved
+    ``sf_dir``, the Spark application id and any ``extra`` parts (a
+    per-call counter where each call must get its own dir). Keyed by the
+    application id so concurrent sessions on the same fixture never
+    overwrite each other's files mid-read."""
+    parts = [os.path.realpath(sf_dir), spark.sparkContext.applicationId, *extra]
+    return hashlib.md5("|".join(map(str, parts)).encode()).hexdigest()[:12]
 
 
 def scratch_dir(kind: str, tag: str) -> str:

@@ -8,8 +8,12 @@ the DuckDB oracles double-check it.
 
 Twins of that template shape (one source table, one transform, one drain,
 an optional batch-side finish) are built by ``twin()`` and registered in
-``registry.py``; twins that join, read several sources, read a
-stream-static side or need another drain are functions here.
+``registry.py``. A stream-static twin is the same registration with an
+``index``: the static side is built from the batch read of the same
+table, and the transform is the batch entry's probe, run on the stream
+(the reference's HBase dimension lookups, PAPER.md §1.1). Twins that
+join two streams, read several sources, fan one drain out to several
+consumers or need another drain or sink are functions here.
 
 Production sources/sinks would be Kafka (``format("kafka")`` with a topic
 column for per-row routing, SURVEY §2.1 S3); tests and the driver use the
@@ -28,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_gmall_spark.session import tune
-from flink_gmall_spark.sources.tables import normalize_timestamps
+from flink_gmall_spark.sources.tables import load, normalize_timestamps
 from flink_gmall_spark.sources.tables import path as table_path
 
 from pyspark.sql import types as T
@@ -356,16 +360,25 @@ def write_exactly_once(result: DataFrame, out_dir: str, checkpoint: str):
     )
 
 
-def twin(table: str, transform, mode: str, finish=None):
+def twin(table: str, transform, mode: str, finish=None, index=None):
     """A template streaming twin as a registry query: the batch
     ``transform`` run unchanged on a ``readStream`` of ``table``, drained
     in output ``mode``, then ``finish`` applied batch-side to the drained
     table — for the steps a streaming query cannot run (a stack unpivot
-    or a second aggregation after an aggregation, rank windows)."""
+    or a second aggregation after an aggregation, rank windows).
+
+    With ``index``, the twin is stream-static: ``transform`` receives
+    ``(stream, index(batch read of table))``, the probe the batch entry
+    runs as ``finish(transform(docs, index(docs)))``. The static side is
+    resolved per micro-batch, so the per-arriving-row work is the
+    stateless probe; joins inside it read ``isStreaming`` to drop the
+    batch-only broadcast hints."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         tune(spark)
-        out = run_to_memory(transform(read_stream(spark, sf_dir, table)), mode)
+        src = read_stream(spark, sf_dir, table)
+        static = () if index is None else (index(load(spark, sf_dir, table)),)
+        out = run_to_memory(transform(src, *static), mode)
         return finish(out) if finish else out
 
     return run
@@ -475,10 +488,9 @@ def stream_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     illegal in streaming aggs). Shares ORACLE_PRODUCT_STATS."""
     tune(spark)
     from flink_gmall_spark.functions.parity import MONEY
-    from flink_gmall_spark.sources import load as load_batch
 
     li = read_stream(spark, sf_dir, "lineitem")
-    part = load_batch(spark, sf_dir, "part")
+    part = load(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey, "left")
     agg = joined.groupBy("l_partkey").agg(
         F.first("p_name").alias("sku_name"),
@@ -826,13 +838,11 @@ def stream_province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain), so that one step is the dropDuplicates DataFrame call over
     the SQL view, then a second SQL aggregation folds both branches.
     Shares ORACLE_PROVINCE_STATS."""
-    from flink_gmall_spark.sources import load as load_batch
-
     tune(spark)
     orders = read_stream(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("s_orders")
-    load_batch(spark, sf_dir, "customer").createOrReplaceTempView("s_customer")
-    load_batch(spark, sf_dir, "nation").createOrReplaceTempView("s_nation")
+    load(spark, sf_dir, "customer").createOrReplaceTempView("s_customer")
+    load(spark, sf_dir, "nation").createOrReplaceTempView("s_nation")
     enriched = spark.sql(
         """
         SELECT date_format(o.o_orderdate, 'yyyy-MM-dd') AS stt,
@@ -1109,7 +1119,6 @@ def stream_pipeline_payment_province(spark: SparkSession, sf_dir: str) -> DataFr
     (partition-order-independent), rendered as double.
     """
     from flink_gmall_spark.functions.parity import MONEY
-    from flink_gmall_spark.sources import load as load_batch
 
     tune(spark)
     order = (
@@ -1159,8 +1168,8 @@ def stream_pipeline_payment_province(spark: SparkSession, sf_dir: str) -> DataFr
         ),
         "inner",
     )
-    cust = load_batch(spark, sf_dir, "customer")
-    nation = load_batch(spark, sf_dir, "nation")
+    cust = load(spark, sf_dir, "customer")
+    nation = load(spark, sf_dir, "nation")
     dim = F.broadcast(
         cust.join(nation, cust.c_nationkey == nation.n_nationkey).select(
             F.col("c_custkey").alias("dim_user"),
@@ -1252,15 +1261,10 @@ def stream_ads_hourly_from_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum over 10 s windows), not a cross-window distinct. The oracle
     composes the append-mode watermark-boundary rule with that rollup,
     so the hash checks the full producer→sink→consumer chain."""
-    import hashlib as _hashlib
-
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
     tune(spark)
-    tag = _hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    out = scratch_dir("ads_sink", tag)
+    out = scratch_dir("ads_sink", session_tag(spark, sf_dir))
     sink_dir = os.path.join(out, "visitor_stats")
     ckpt = os.path.join(out, "_ckpt")
 
@@ -1318,36 +1322,12 @@ GROUP BY 1
 ORACLE_ADS_HOURLY_FROM_SINK = _oracle_ads_hourly_from_sink()
 
 
-def stream_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ encoding at INGEST time — the stream-static form a production
-    vector pipeline runs: the codebook is TRAINED OFFLINE (here the
-    static batch read supplies it) and broadcast against the embedding
-    STREAM; each arriving vector emits its codes once, stateless, append
-    mode. Exercises the stream-static broadcast join with a map-only
-    payload; shares ORACLE_PQ_ENCODE with the batch twin."""
-    tune(spark)
-    from flink_gmall_spark.operators.ann import _pq_codes
-    from flink_gmall_spark.sources import load
-
-    to_v = "transform(embedding, x -> cast(x AS double))"
-    e_stream = read_stream(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(to_v).alias("v")
-    )
-    e_static = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(to_v).alias("v")
-    )
-    codes = _pq_codes(e_stream, cb_src=e_static).select(
-        "vec_id", "sub_id", "code", F.round("sdist", 6).alias("sdist")
-    )
-    return run_to_memory(codes, "append")
-
-
 def stream_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL vector-index maintenance loop, chained through the
     exactly-once store — how a production retrieval system actually runs:
 
       1. maintain: the embedding STREAM encodes against the static
-         codebook (the stream-static shape of stream_pq_encode) and the
+         codebook (ann.pq_encode_probe, the stream_pq_encode probe) and the
          codes land in an epoch-partitioned exactly-once parquet index
          (write_exactly_once — checkpointed offsets + idempotent epoch
          overwrite, T9; a replayed batch can never duplicate index rows).
@@ -1358,28 +1338,22 @@ def stream_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is ORACLE_PQ_ADC_TOPK unchanged: if the store hop dropped,
     duplicated, or mangled one code row, ranks shift and the hash fails —
     the chain proof, same discipline as stream_ads_hourly_from_sink."""
-    import hashlib as _hashlib
-
-    from flink_gmall_spark.operators.ann import _pq_codes, adc_topk_from_codes
-    from flink_gmall_spark.scratch import scratch_dir
-    from flink_gmall_spark.sources import load
+    from flink_gmall_spark.operators.ann import (
+        adc_topk_from_codes,
+        pq_encode_probe,
+        pq_vectors,
+    )
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
     tune(spark)
-    tag = _hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    out = scratch_dir("pq_index", tag)
+    out = scratch_dir("pq_index", session_tag(spark, sf_dir))
     sink_dir = os.path.join(out, "codes")
     ckpt = os.path.join(out, "_ckpt")
 
-    to_v = "transform(embedding, x -> cast(x AS double))"
-    e_stream = read_stream(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(to_v).alias("v")
-    )
-    e_static = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(to_v).alias("v")
-    )
-    codes = _pq_codes(e_stream, cb_src=e_static).select("vec_id", "sub_id", "code")
+    e_static = pq_vectors(load(spark, sf_dir, "embeddings"))
+    codes = pq_encode_probe(
+        read_stream(spark, sf_dir, "embeddings"), e_static
+    ).select("vec_id", "sub_id", "code")
     q = write_exactly_once(codes, sink_dir, ckpt)
     q.awaitTermination()
 
@@ -1411,7 +1385,6 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shingles,
         raw_shingles,
     )
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     # static build side (the batch product a scheduled job maintains)
@@ -1504,14 +1477,10 @@ def zorder_stream_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the epoch-partitioned exactly-once store, then rewrite ``epoch=*``
     into the Morton-clustered layout. Returns (store, clustered)."""
     from flink_gmall_spark.operators.scale import zorder_cluster
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
     tune(spark)
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
-        f"|{next(_ZC_CALLS)}".encode()
-    ).hexdigest()[:12]
-    base = scratch_dir("zorder_stream", tag)
+    base = scratch_dir("zorder_stream", session_tag(spark, sf_dir, next(_ZC_CALLS)))
     store = os.path.join(base, "store")
     ckpt = os.path.join(base, "_ckpt")
     clustered = os.path.join(base, "clustered")
@@ -1590,7 +1559,6 @@ def stream_containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw_shingles,
         shingle_array,
     )
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     docs_static = load(spark, sf_dir, "documents")
@@ -1637,57 +1605,6 @@ def stream_containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_lm_logprob — the perplexity-filter
-    deployment shape (the stream_importance_resample precedent): the
-    bigram LM is trained OFFLINE on the static corpus
-    (curation._lm_count_tables), arriving documents are exploded and
-    scored AT INGEST through stream-static LEFT joins plus the
-    constant-key vocabulary broadcast (curation.lm_attach_counts,
-    shared VERBATIM — unseen bigrams score the add-one floor instead of
-    being dropped, review r12), and the per-doc ln fold applies
-    batch-side on the drained term table via curation.lm_logprob_finish
-    (also shared). Shares ORACLE_LM_LOGPROB: live scoring equals the
-    backfill by contract."""
-    from flink_gmall_spark.operators.curation import (
-        _lm_bigrams,
-        _lm_count_tables,
-        lm_attach_counts,
-        lm_logprob_finish,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    c12, c1v, vocab = _lm_count_tables(load(spark, sf_dir, "documents"))
-    g = _lm_bigrams(read_stream(spark, sf_dir, "documents"))
-    served = lm_attach_counts(g, c12, c1v, vocab)
-    return lm_logprob_finish(run_to_memory(served, "append"))
-
-
-def stream_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_importance_resample — the DSIR
-    deployment shape: importance weights estimated OFFLINE on the
-    backfill (dsir_weight_table over the static table, folded into the
-    one-row broadcast array), documents scored and resampled AT INGEST
-    (per-row JVM fold + deterministic md5 draw, _dsir_scored shared
-    VERBATIM via a stream-static broadcast join on the constant key),
-    the per-source ledger folding through ONE complete-mode aggregation
-    on the bounded source key (_dsir_ledger, also shared). Shares
-    ORACLE_IMPORTANCE_RESAMPLE — stream-filtered and batch-selected
-    subsets are identical by contract."""
-    from flink_gmall_spark.operators.curation import (
-        _dsir_ledger,
-        _dsir_scored,
-        _dsir_warr,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    warr = _dsir_warr(load(spark, sf_dir, "documents"))
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(_dsir_ledger(_dsir_scored(docs, warr)), "complete")
-
-
 def stream_ivf_range_serve(
     spark: SparkSession, sf_dir: str, exact_sample_hex: str | None = None
 ) -> DataFrame:
@@ -1713,7 +1630,6 @@ def stream_ivf_range_serve(
         range_exact_counts,
         range_rank_finish,
     )
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
@@ -1765,135 +1681,6 @@ def stream_ivf_range_serve_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def stream_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """retrieval.bm25_topk as a SERVING job — a query STREAM scored
-    against the static BM25 index, the deployment shape of a lexical
-    retrieval endpoint. The corpus side (retrieval.scored_postings:
-    tf/df/dl/stats folded into one per-posting BIGINT term score) is
-    entirely static and resolved per micro-batch; the per-arriving-query
-    work is a stateless tokenize+explode (occurrence-level — BM25's qtf
-    weighting by repetition is what makes the ingest map state-free; a
-    distinct would be illegal in append mode) plus one stream-static
-    equi-join on tok. The per-(query, doc) integer sum and the top-k
-    window apply batch-side on the drained match table via
-    retrieval.bm25_finish (shared VERBATIM — rank windows cannot follow
-    an append stream); shares ORACLE_BM25_TOPK, so the served ranking is
-    hash-identical to the batch index by contract."""
-    return _bm25_serve(spark, sf_dir)
-
-
-def _bm25_serve(spark: SparkSession, sf_dir: str, logidf: bool = False) -> DataFrame:
-    """The one definition of the lexical serve shape — the unlogged and
-    logged-idf twins differ ONLY in which static score table the query
-    stream joins (scored_postings vs logidf_scored_postings)."""
-    from flink_gmall_spark.operators.retrieval import (
-        bm25_finish,
-        bm25_match,
-        logidf_scored_postings,
-        query_occurrences,
-        scored_postings,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    score_table = logidf_scored_postings if logidf else scored_postings
-    sp = score_table(load(spark, sf_dir, "documents"))
-    occ = query_occurrences(read_stream(spark, sf_dir, "documents"))
-    # shared match semantics (review r11): only the broadcast hint is
-    # batch-specific — a streaming side cannot take it
-    served = bm25_match(occ, sp, broadcast=False).select(
-        "query_id", "doc_id", "score_i"
-    )
-    return bm25_finish(run_to_memory(served, "append"))
-
-
-def stream_bm25_logidf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text_bm25_topk_logidf as a SERVING job — the logged-idf score
-    table is entirely static (the ln chain is index-build work), so the
-    serve path is stream_bm25_serve's shape verbatim with the logidf
-    postings swapped in (_bm25_serve, one definition). Shares
-    ORACLE_BM25_TOPK_LOGIDF: served and batch rankings are
-    hash-identical by contract."""
-    return _bm25_serve(spark, sf_dir, logidf=True)
-
-
-def stream_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_retrieval_eval with the LEXICAL leg served from the live
-    query stream (stream_bm25_serve) and the exact-cosine pseudo-qrels
-    from the static index; MRR/nDCG ledger applies batch-side via
-    retrieval.retrieval_eval_finish (shared VERBATIM). Shares
-    ORACLE_RETRIEVAL_EVAL: the serving path must grade identically to
-    the batch eval harness."""
-    from flink_gmall_spark.operators.ann import ann_topk
-    from flink_gmall_spark.operators.retrieval import retrieval_eval_finish
-
-    tune(spark)
-    # the finisher joins the lex list against itself (directly in the
-    # stacked union AND through the fused branch) — a MemoryPlan leaf is
-    # not multi-instance, so give the drained, query-bounded rank list a
-    # fresh leaf (the stream_query_expansion_prf qvocab precedent)
-    lex = (
-        stream_bm25_serve(spark, sf_dir)
-        .select("query_id", "doc_id", "rank")
-        .localCheckpoint()
-    )
-    sem = ann_topk(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
-    )
-    return retrieval_eval_finish(lex, sem)
-
-
-def stream_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_rrf_k_sweep with the LEXICAL leg served from the live query
-    stream (stream_bm25_serve — one definition of the serve-side
-    streaming query) and the semantic leg from the static index; the
-    whole sweep ledger applies batch-side via retrieval.rrf_k_sweep_finish
-    (shared VERBATIM — rank windows cannot follow an append stream).
-    Shares ORACLE_RRF_K_SWEEP: tuning the fusion knob on the serving
-    path must price identically to the batch calibration."""
-    from flink_gmall_spark.operators.ann import ann_topk
-    from flink_gmall_spark.operators.retrieval import rrf_k_sweep_finish
-
-    tune(spark)
-    lex = stream_bm25_serve(spark, sf_dir).select(
-        "query_id", "doc_id", F.col("rank").alias("lex_rank")
-    )
-    sem = ann_topk(spark, sf_dir).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rank").alias("sem_rank"),
-    )
-    return rrf_k_sweep_finish(lex, sem)
-
-
-def stream_hybrid_rrf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """retrieval.hybrid_rrf as a SERVING job — the lexical leg is the
-    live query stream of stream_bm25_serve (stateless tokenize+explode
-    at ingest, stream-static join against the scored postings), the
-    semantic leg is the static brute-force cosine index, and the fusion
-    itself (full-outer rank join + the fixed-order RRF sum + the final
-    per-query window) applies batch-side on the drained lexical match
-    table via retrieval.rrf_finish / bm25_finish (both shared VERBATIM
-    with the batch entry — rank windows cannot follow an append stream).
-    Shares ORACLE_HYBRID_RRF, so the served fusion is hash-identical to
-    the batch one by contract."""
-    from flink_gmall_spark.operators.ann import ann_topk
-    from flink_gmall_spark.operators.retrieval import rrf_finish
-
-    tune(spark)
-    # the lexical leg IS stream_bm25_serve (review r11: one definition of
-    # the serve-side streaming query, not a hand-synced copy)
-    lex = stream_bm25_serve(spark, sf_dir).select(
-        "query_id", "doc_id", F.col("rank").alias("lex_rank")
-    )
-    sem = ann_topk(spark, sf_dir).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rank").alias("sem_rank"),
-    )
-    return rrf_finish(lex, sem)
-
-
 def stream_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """text_query_expansion_prf as a SERVING job — expansion terms mined
     for queries ARRIVING ON A STREAM against the static corpus. ONE
@@ -1920,7 +1707,6 @@ def stream_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_occurrences,
         scored_postings,
     )
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     docs_static = load(spark, sf_dir, "documents")
@@ -1933,203 +1719,8 @@ def stream_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched = drained.filter(
         F.col("doc_id").isNotNull() & (F.col("doc_id") != F.col("query_id"))
     ).select("query_id", "doc_id", "score_i")
-    # prf_finish anti-joins qvocab against the match lineage — both
-    # branches of ONE MemoryPlan leaf, which is not multi-instance, so
-    # Spark cannot deduplicate the self-join. The vocabulary is bounded
-    # by the query stream's token set (it broadcasts inside prf_finish
-    # anyway): a localCheckpoint gives it a fresh leaf for pennies.
-    qvocab = drained.select("query_id", "tok").distinct().localCheckpoint()
+    qvocab = drained.select("query_id", "tok").distinct()
     return prf_finish(bm25_finish(matched), _postings(docs_static), qvocab)
-
-
-def stream_retrieval_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """curation_retrieval_triplets as a SERVING job — triplets mined
-    incrementally for queries ARRIVING ON A STREAM (the online
-    hard-negative-refresh shape): the lexical leg is stream_bm25_serve's
-    stateless match join drained to the shared bm25_finish rank list,
-    and everything downstream — the positives slice, the md5-threshold
-    negative pool over the STATIC corpus, the pairing — applies
-    batch-side via retrieval.triplets_finish (shared VERBATIM). Shares
-    ORACLE_RETRIEVAL_TRIPLETS, so the served triplet set is
-    hash-identical to the batch mine by contract."""
-    from flink_gmall_spark.operators.retrieval import (
-        bm25_finish,
-        bm25_match,
-        query_occurrences,
-        scored_postings,
-        triplets_finish,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    docs_static = load(spark, sf_dir, "documents")
-    served = bm25_match(
-        query_occurrences(read_stream(spark, sf_dir, "documents")),
-        scored_postings(docs_static),
-        broadcast=False,
-    ).select("query_id", "doc_id", "score_i")
-    return triplets_finish(
-        bm25_finish(run_to_memory(served, "append")), docs_static
-    )
-
-
-def stream_bm25_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text_bm25_param_sweep as a SERVING job — the (k1, b) calibration
-    computed over queries ARRIVING ON A STREAM: the query stream's
-    stateless tokenize+explode joins the static posting-FEATURE table
-    (tf/df/dl/stats — the sweep needs the raw features, not one baked
-    score, so every config prices from the same matched row), and the
-    whole sweep ledger (per-config score sums, stack, windowed
-    default-overlap flag) applies batch-side on the drained match table
-    via retrieval.param_sweep_finish (shared VERBATIM — rank windows
-    cannot follow an append stream). Shares ORACLE_BM25_PARAM_SWEEP:
-    calibrating on the serving path prices identically to the batch
-    calibration by contract."""
-    from flink_gmall_spark.operators.retrieval import (
-        bm25_match,
-        param_sweep_finish,
-        posting_features,
-        query_occurrences,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    feat = posting_features(load(spark, sf_dir, "documents"))
-    occ = query_occurrences(read_stream(spark, sf_dir, "documents"))
-    matched = bm25_match(occ, feat, broadcast=False).select(
-        "query_id", "doc_id", "tf", "df", "dl", "n_docs", "total_len"
-    )
-    return param_sweep_finish(run_to_memory(matched, "append"))
-
-
-def stream_rrf_weighted_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_rrf_weighted as a SERVING job — the unlogged lexical leg is
-    the live query stream (stream_bm25_serve, one definition), the
-    semantic and logged-idf legs are static indexes, and the 3-way
-    weighted fusion applies batch-side via retrieval.rrf_weighted_finish
-    (shared VERBATIM). Shares ORACLE_RRF_WEIGHTED: the served weighted
-    fusion is hash-identical to the batch one by contract."""
-    from flink_gmall_spark.operators.ann import ann_topk
-    from flink_gmall_spark.operators.retrieval import (
-        bm25_topk_logidf,
-        rrf_weighted_finish,
-    )
-
-    tune(spark)
-    lex = stream_bm25_serve(spark, sf_dir).select(
-        "query_id", "doc_id", F.col("rank").alias("lex_rank")
-    )
-    sem = ann_topk(spark, sf_dir).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rank").alias("sem_rank"),
-    )
-    lgx = bm25_topk_logidf(spark, sf_dir).select(
-        "query_id", "doc_id", F.col("rank").alias("lgx_rank")
-    )
-    return rrf_weighted_finish(lex, sem, lgx)
-
-
-def stream_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_bm25_hard_negatives as a SERVING job — lexical negative
-    mining for queries ARRIVING ON A STREAM (the online
-    negative-refresh shape): the BM25 candidates come from
-    stream_bm25_serve's drained rank list, the near-dup exclusion and
-    the exact-denominator recall ledger apply batch-side via
-    retrieval.bm25_negatives_finish (shared VERBATIM). Shares
-    ORACLE_BM25_HARD_NEGATIVES: the served mining ledger is
-    hash-identical to the batch one by contract."""
-    from flink_gmall_spark.operators.ann import _with_norm, hard_negatives
-    from flink_gmall_spark.operators.retrieval import bm25_negatives_finish
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    exact = hard_negatives(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("doc_id")
-    )
-    # the finisher consumes the rank list through two branches (the
-    # ledger aggregate AND the hits join) — a MemoryPlan leaf is not
-    # multi-instance, so give the drained, query-bounded list a fresh
-    # leaf (the stream_retrieval_eval precedent)
-    lex = stream_bm25_serve(spark, sf_dir).localCheckpoint()
-    return bm25_negatives_finish(lex, emb, exact)
-
-
-def stream_phrase_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text_phrase_search as a SERVING job — phrase queries ARRIVING ON
-    A STREAM probe the static positional index: the per-arriving-doc
-    work is a stateless adjacent-pair transform+explode
-    (query_bigram_occurrences, map-only) plus BOTH positional legs as
-    chained stream-static equi-joins (phrase_adjacent_matches, broadcast
-    hint off — the adjacency leg joins the resident index per
-    micro-batch, which is what a deployed endpoint does); only the
-    output-bounded adjacency MATCHES drain to the sink (leg-1 rows are
-    posting-list-sized — draining them would checkpoint the posting
-    lists themselves), and the ranking applies batch-side via
-    retrieval.phrase_finish (shared VERBATIM). Shares
-    ORACLE_PHRASE_SEARCH, so the served phrase ranking is
-    hash-identical to the batch index probe by contract."""
-    from flink_gmall_spark.operators.retrieval import (
-        phrase_adjacent_matches,
-        phrase_finish,
-        pos_index,
-        query_bigram_occurrences,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    idx = pos_index(load(spark, sf_dir, "documents"))
-    qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
-    matches = phrase_adjacent_matches(qbg, idx, broadcast=False)
-    return phrase_finish(run_to_memory(matches, "append"))
-
-
-def stream_proximity_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text_proximity_topk as a SERVING job — proximity queries ARRIVING
-    ON A STREAM probe the static positional index (the stream_phrase_serve
-    discipline exactly): stateless adjacent-pair transform at ingest,
-    both positional legs as stream-static joins with the broadcast hint
-    off (leg 2's band join runs against the resident index per
-    micro-batch — a deployed endpoint's shape), only the output-bounded
-    span MATCHES drain to the sink, ranking batch-side via
-    retrieval.proximity_finish (shared VERBATIM). Shares
-    ORACLE_PROXIMITY_TOPK, so the served proximity ranking is
-    hash-identical to the batch index probe by contract."""
-    from flink_gmall_spark.operators.retrieval import (
-        pos_index,
-        proximity_finish,
-        proximity_matches,
-        query_bigram_occurrences,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    idx = pos_index(load(spark, sf_dir, "documents"))
-    qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
-    matches = proximity_matches(qbg, idx, broadcast=False)
-    return proximity_finish(run_to_memory(matches, "append"))
-
-
-def stream_proximity_unordered_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """proximity_unordered_topk as a SERVING job — the unordered-window
-    member of the positional-serving family, identical contract to
-    stream_proximity_serve (stateless ingest transform, stream-static
-    legs, bounded span matches drain, proximity_finish batch-side
-    VERBATIM). Shares ORACLE_PROXIMITY_UNORDERED."""
-    from flink_gmall_spark.operators.retrieval import (
-        pos_index,
-        proximity_finish,
-        proximity_matches,
-        query_bigram_occurrences,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    idx = pos_index(load(spark, sf_dir, "documents"))
-    qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
-    matches = proximity_matches(qbg, idx, broadcast=False, ordered=False)
-    return proximity_finish(run_to_memory(matches, "append"))
 
 
 def stream_sdm_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2139,7 +1730,8 @@ def stream_sdm_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     off the arriving-query stream and UNION into ONE append sink — a
     deployed endpoint drains one tagged match stream, not three
     queries. Per-arriving-query work is stateless (tokenize / pair
-    explode + equi-joins, broadcast hint off per the serve contract);
+    explode + equi-joins; the match helpers drop their broadcast hints
+    on a streaming side);
     the per-(query, doc) sums, LEFT-join fusion, and rank window apply
     batch-side on the drained legs via retrieval.sdm_fuse (shared
     VERBATIM with the batch entry). Shares ORACLE_SDM_TOPK: the served
@@ -2155,7 +1747,6 @@ def stream_sdm_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored_postings,
         sdm_fuse,
     )
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     docs = load(spark, sf_dir, "documents")
@@ -2164,19 +1755,19 @@ def stream_sdm_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
     closeness = (F.lit(PROX_WINDOW + 1) - F.col("span")).cast("long")
     legs = (
-        bm25_match(qocc, sp, broadcast=False)
+        bm25_match(qocc, sp)
         .select(
             "query_id", "doc_id", F.lit("uni").alias("leg"),
             F.col("score_i").cast("long").alias("val"),
         )
         .unionByName(
-            proximity_matches(qbg, idx, broadcast=False).select(
+            proximity_matches(qbg, idx).select(
                 "query_id", "doc_id", F.lit("ord").alias("leg"),
                 closeness.alias("val"),
             )
         )
         .unionByName(
-            proximity_matches(qbg, idx, broadcast=False, ordered=False).select(
+            proximity_matches(qbg, idx, ordered=False).select(
                 "query_id", "doc_id", F.lit("unw").alias("leg"),
                 closeness.alias("val"),
             )
@@ -2219,7 +1810,6 @@ def stream_blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.operators.curation import BLOCKLIST_PHRASES
     from flink_gmall_spark.operators.dedup import apply_span_cuts, merged_spans
     from flink_gmall_spark.functions.tokenize import tokens_col
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     terms = [
@@ -2269,35 +1859,6 @@ def stream_blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_exact_substring_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_exact_substring_runs as a PROBE job — documents ARRIVING ON
-    A STREAM are matched against the STATIC capped positional gram
-    postings (the ingestion-time shape of an exact-substring dedup
-    service: does this incoming doc share a verbatim run with anything
-    already in the corpus?). Per-arriving-doc work is the stateless
-    raw-gram explode plus one stream-static equi-join on gram; the
-    d1 < d2 orientation counts each unordered pair exactly once as the
-    stream replays the corpus, and cap parity is implied because only
-    under-cap grams exist on the static side (raw_positional_grams
-    docstring). The run assembly (diagonal islands) is a keyed window —
-    it cannot run in append mode, so the bounded match rows drain and
-    dedup.runs_finish applies batch-side VERBATIM. Shares
-    ORACLE_EXACT_SUBSTRING_RUNS: the served ledger is hash-identical to
-    the batch self-join by contract."""
-    from flink_gmall_spark.operators.dedup import (
-        positional_run_grams,
-        raw_positional_grams,
-        runs_finish,
-        substring_gram_matches,
-    )
-    from flink_gmall_spark.sources import load
-
-    tune(spark)
-    idx = positional_run_grams(load(spark, sf_dir, "documents"))
-    sg = raw_positional_grams(read_stream(spark, sf_dir, "documents"))
-    matches = substring_gram_matches(idx, sg)
-    return runs_finish(run_to_memory(matches, "append"))
-
 def stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """curation.unigram_encode_corpus at INGEST TIME — the tokenizer-
     serving twin (VERDICT r14 ask #4): documents arriving on a stream
@@ -2327,7 +1888,6 @@ def stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unigram_vocab,
         _word_occurrences,
     )
-    from flink_gmall_spark.sources import load
 
     tune(spark)
     _, vocab = _unigram_vocab(load(spark, sf_dir, "documents"))

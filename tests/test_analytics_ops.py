@@ -1557,7 +1557,9 @@ def test_stream_exact_substring_probe_equals_batch(spark, sf_dir):
     d1 < d2 once per pair, runs_finish applied after the drain) must be
     row-identical to the batch self-join."""
     from flink_gmall_spark.operators import dedup as D
-    from flink_gmall_spark.streaming.jobs import stream_exact_substring_probe
+    from flink_gmall_spark.registry import registry
+
+    stream_exact_substring_probe = registry()["stream_exact_substring_probe"].fn
 
     batch = sorted(map(tuple, D.exact_substring_runs(spark, sf_dir).collect()))
     served = sorted(

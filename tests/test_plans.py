@@ -1158,3 +1158,37 @@ def test_bucketed_sdm_serve_zero_tok_shuffle(spark, sf_dir):
         f"SelectedBucketsCount: {scale.BUCKET_N} out of {scale.BUCKET_N}"
         in plan
     ), plan
+
+
+def test_positional_probes_derive_broadcast_from_the_query_side(spark, sf_dir):
+    """The match helpers read whether to broadcast from their input: a
+    batch query side broadcasts into leg 1 and prunes the adjacency leg
+    to the query vocabulary (a LeftSemi join); the same probe built on a
+    read_stream source takes neither, since a streaming side cannot take
+    the hint and the prune would make the static leg depend on the
+    stream."""
+    from flink_gmall_spark.operators import retrieval as R
+    from flink_gmall_spark.registry import registry
+    from flink_gmall_spark.sources import load
+    from flink_gmall_spark.streaming.jobs import read_stream
+
+    idx = R.pos_index(load(spark, sf_dir, "documents"))
+    stream = read_stream(spark, sf_dir, "documents")
+    for name, probe in (
+        ("text_phrase_search", R.phrase_probe),
+        ("text_proximity_topk", R.proximity_probe),
+    ):
+        plan = plan_of(registry()[name].fn(spark, sf_dir))
+        assert re.search(
+            r"BroadcastHashJoin \[w1#\d+\], \[w1#\d+\], Inner, BuildLeft", plan
+        ), plan
+        assert "LeftSemi" in plan, plan
+        served = probe(stream, idx)
+        assert served.isStreaming
+        logical = served._jdf.queryExecution().analyzed().toString()
+        assert "LeftSemi" not in logical, logical
+        # the static side keeps its df-cap broadcast; no hint sits on a
+        # streaming (~) node
+        assert not re.search(
+            r"ResolvedHint \(strategy=broadcast\)\n[ :|]*\+- ~", logical
+        ), logical

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_gmall_spark.operators import retrieval as R
+from flink_gmall_spark.registry import registry
 
 TINY = [
     (0, "apple banana apple cherry"),
@@ -211,7 +212,7 @@ def test_bm25_param_sweep_plan_single_stack_no_cartesian(spark, sf_dir):
 
 
 def test_stream_bm25_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_bm25_serve
+    stream_bm25_serve = registry()["stream_bm25_serve"].fn
 
     batch = sorted(map(tuple, R.bm25_topk(spark, sf_dir).collect()))
     served = sorted(map(tuple, stream_bm25_serve(spark, sf_dir).collect()))
@@ -277,7 +278,7 @@ def test_query_expansion_prf_excludes_query_vocabulary(spark, sf_dir):
 
 
 def test_stream_hybrid_rrf_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_hybrid_rrf_serve
+    stream_hybrid_rrf_serve = registry()["stream_hybrid_rrf_serve"].fn
 
     batch = sorted(map(tuple, R.hybrid_rrf(spark, sf_dir).collect()))
     served = sorted(
@@ -327,7 +328,7 @@ def test_retrieval_triplets_contract(spark, sf_dir):
 
 
 def test_stream_retrieval_triplets_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_retrieval_triplets
+    stream_retrieval_triplets = registry()["stream_retrieval_triplets"].fn
 
     batch = sorted(map(tuple, R.retrieval_triplets(spark, sf_dir).collect()))
     served = sorted(
@@ -683,7 +684,7 @@ def test_rrf_k_sweep_plan_single_stack(spark, sf_dir):
 
 
 def test_stream_bm25_logidf_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_bm25_logidf_serve
+    stream_bm25_logidf_serve = registry()["stream_bm25_logidf_serve"].fn
 
     batch = sorted(map(tuple, R.bm25_topk_logidf(spark, sf_dir).collect()))
     served = sorted(
@@ -693,7 +694,7 @@ def test_stream_bm25_logidf_serve_equals_batch(spark, sf_dir):
 
 
 def test_stream_rrf_k_sweep_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_rrf_k_sweep
+    stream_rrf_k_sweep = registry()["stream_rrf_k_sweep"].fn
 
     batch = sorted(map(tuple, R.rrf_k_sweep(spark, sf_dir).collect()))
     served = sorted(map(tuple, stream_rrf_k_sweep(spark, sf_dir).collect()))
@@ -750,7 +751,7 @@ def test_retrieval_eval_matches_python(spark, sf_dir):
 
 
 def test_stream_retrieval_eval_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_retrieval_eval
+    stream_retrieval_eval = registry()["stream_retrieval_eval"].fn
 
     batch = sorted(map(tuple, R.retrieval_eval(spark, sf_dir).collect()))
     served = sorted(
@@ -806,7 +807,6 @@ def test_zipf_two_phase_top_n_plan(spark, sf_dir):
 
 def test_stream_zipf_slope_equals_batch(spark, sf_dir):
     from flink_gmall_spark.operators import textstats as T
-    from flink_gmall_spark.registry import registry
 
     stream_zipf_slope = registry()["stream_zipf_slope"].fn
     batch = sorted(map(tuple, T.zipf_slope(spark, sf_dir).collect()))
@@ -856,8 +856,8 @@ def test_lm_logprob_matches_python(spark, sf_dir):
 
 def test_stream_lm_logprob_equals_batch(spark, sf_dir):
     from flink_gmall_spark.operators import curation as C
-    from flink_gmall_spark.streaming.jobs import stream_lm_logprob
 
+    stream_lm_logprob = registry()["stream_lm_logprob"].fn
     batch = sorted(map(tuple, C.lm_logprob_score(spark, sf_dir).collect()))
     served = sorted(map(tuple, stream_lm_logprob(spark, sf_dir).collect()))
     assert batch == served
@@ -897,7 +897,6 @@ def test_token_entropy_matches_python(spark, sf_dir):
 
 def test_stream_token_entropy_equals_batch(spark, sf_dir):
     from flink_gmall_spark.operators import textstats as T
-    from flink_gmall_spark.registry import registry
 
     stream_token_entropy = registry()["stream_token_entropy"].fn
     batch = sorted(map(tuple, T.token_entropy(spark, sf_dir).collect()))
@@ -1007,7 +1006,7 @@ def test_lm_logprob_scores_unseen_bigrams(spark):
         r.doc_id: (r.n_bigrams, r.sum_logp_x1e6)
         for r in C.lm_logprob_finish(
             C.lm_attach_counts(
-                C._lm_bigrams(arriving), *C._lm_count_tables(train)
+                C._lm_bigrams(arriving), *C.lm_count_tables(train)
             )
         ).collect()
     }
@@ -1104,7 +1103,7 @@ def test_phrase_plan_shape(spark, sf_dir):
 
 
 def test_stream_phrase_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_phrase_serve
+    stream_phrase_serve = registry()["stream_phrase_serve"].fn
 
     batch = sorted(map(tuple, R.phrase_search(spark, sf_dir).collect()))
     served = sorted(map(tuple, stream_phrase_serve(spark, sf_dir).collect()))
@@ -1165,7 +1164,7 @@ def test_rrf_weighted_matches_python(spark, sf_dir):
 
 
 def test_stream_rrf_weighted_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_rrf_weighted_serve
+    stream_rrf_weighted_serve = registry()["stream_rrf_weighted_serve"].fn
 
     batch = sorted(map(tuple, R.rrf_weighted(spark, sf_dir).collect()))
     served = sorted(
@@ -1232,7 +1231,7 @@ def test_bm25_hard_negatives_ledger(spark, sf_dir):
 
 
 def test_stream_bm25_hard_negatives_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_bm25_hard_negatives
+    stream_bm25_hard_negatives = registry()["stream_bm25_hard_negatives"].fn
 
     batch = sorted(map(tuple, R.bm25_hard_negatives(spark, sf_dir).collect()))
     served = sorted(
@@ -1242,7 +1241,7 @@ def test_stream_bm25_hard_negatives_equals_batch(spark, sf_dir):
 
 
 def test_stream_bm25_param_sweep_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_bm25_param_sweep
+    stream_bm25_param_sweep = registry()["stream_bm25_param_sweep"].fn
 
     batch = sorted(map(tuple, R.bm25_param_sweep(spark, sf_dir).collect()))
     served = sorted(
@@ -1465,7 +1464,7 @@ def test_proximity_plan_shape(spark, sf_dir):
 
 
 def test_stream_proximity_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import stream_proximity_serve
+    stream_proximity_serve = registry()["stream_proximity_serve"].fn
 
     batch = sorted(map(tuple, R.proximity_topk(spark, sf_dir).collect()))
     served = sorted(
@@ -1536,9 +1535,7 @@ def test_proximity_unordered_matches_python_mirror(spark):
 
 
 def test_stream_proximity_unordered_serve_equals_batch(spark, sf_dir):
-    from flink_gmall_spark.streaming.jobs import (
-        stream_proximity_unordered_serve,
-    )
+    stream_proximity_unordered_serve = registry()["stream_proximity_unordered_serve"].fn
 
     batch = sorted(
         map(tuple, R.proximity_unordered_topk(spark, sf_dir).collect())

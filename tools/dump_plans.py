@@ -173,14 +173,15 @@ def condense(plan: str, max_lines: int = 40) -> str:
 
 
 # Per-run noise in explain text: expression, plan and lambda-variable
-# ids, streaming run ids, and the random names of drain tables and
-# scratch dirs.
+# ids, streaming run ids, the random names of drain tables and scratch
+# dirs, and the per-session tag (scratch.session_tag; 8 hex digits in
+# older trees) in scratch paths and bucketed table names.
 _VOLATILE = (
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"(lambda \w+?)_\d+#"), r"\1_#"),
     (re.compile(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "<uuid>"),
-    (re.compile(r"(mem_|stream_drain/|/)[0-9a-f]{12}\b"), r"\1<id>"),
+    (re.compile(r"(mem_|/|fgs_bkt_\w+?_)[0-9a-f]{8}(?:[0-9a-f]{4})?\b"), r"\1<id>"),
 )
 
 
